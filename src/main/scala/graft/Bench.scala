@@ -26,9 +26,27 @@ import org.apache.spark.sql.SparkSession
   * policy below.
   */
 object Bench {
+  /** JSON string escape for text not fixed in the source (env-sourced
+    * paths, query names, oracle SQL): backslash, quote, and ALL control
+    * chars (< 0x20) — a tab or CR would otherwise make the reader's
+    * json.load fail. `jesc` escapes content for use inside an
+    * already-quoted literal; `jstr` produces the full quoted literal. */
+  def jesc(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+  def jstr(s: String): String = "\"" + jesc(s) + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // default: the host's core count (a measured value, not a knob)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // optional arg: comma-separated query names (targeted local timing);
     // the driver passes no args and always measures the full set
     val only = args.headOption.map(_.split(",").toSet)
@@ -196,25 +214,11 @@ object Bench {
         case None => (name, runs.head._1, runs.head._2, runs.head._3, false, raw)
       }
     }
-    // minimal JSON string escaper for anything not builder-controlled
-    // (env-sourced paths, query names): backslash, quote, control chars.
-    // jesc escapes content for use inside an already-quoted literal;
-    // jstr produces the full quoted literal.
     // ROOT-locale numeric rendering: the f interpolator uses the JVM
     // default locale, so a comma-decimal locale (de_DE, fr_FR) would
     // render 12,345 and make every line unparseable JSON
     def num3(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    def jesc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def jstr(s: String): String = "\"" + jesc(s) + "\""
     // failed queries report -1 (not their near-zero abort time) and are
     // listed in "failed", so a regression can't silently shrink the total
     val qs = results.map { case (k, w, _, _, ok, _) =>

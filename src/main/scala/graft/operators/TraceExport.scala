@@ -76,26 +76,6 @@ object TraceExport {
       (col("ts") + expr("INTERVAL 60 SECONDS")).as("endTime"),
       gzip_string(col("props")).as("traceData"))
 
-  /** The reference query: ids IN-list + closed startTime interval (both ends
-    * inclusive, END_TIME unconstrained — ParameterDataRepository.java:65-67),
-    * ORDER BY paramIndex, startTime, decompress payload to text.
-    *
-    * `maxPayloadBytes` (engine extension, default unbounded = reference
-    * parity) bounds each row's INFLATED size: the reference only ever
-    * inflates its own trusted writes (util/GzipUtil.java:19-31), but an
-    * export over third-party ingested traces must not let one hostile
-    * high-ratio payload kill an executor. Strict semantics, matching the
-    * reference's abort-on-corrupt policy: an over-budget row fails the
-    * export. */
-  /** The shared filter→decompress→project chain of every export variant —
-    * ONE definition, so a guard added to the flagship cannot drift out of
-    * the scale/streaming twins (the maxPayloadBytes bound had done
-    * exactly that). Time bounds enter as `LocalDateTime` literals
-    * (TimestampNTZType directly): a `java.sql.Timestamp` literal is an
-    * LTZ instant whose NTZ cast re-reads the wall clock through the
-    * SESSION timezone — with JVM default ≠ session tz the window would
-    * silently shift by the zone offset against the NTZ startTime column.
-    * `toLocalDateTime` keeps the caller's wall clock exactly. */
   /** The IN-list + closed time-range filter shared by every export
     * variant — ONE definition, so the variants cannot drift (the
     * maxPayloadBytes bound had drifted out of two of the three). Time
@@ -125,6 +105,17 @@ object TraceExport {
       col("endTime"),
       gunzip_string(col("traceData"), maxBytes = maxPayloadBytes).as("traceData"))
 
+  /** The reference query: ids IN-list + closed startTime interval (both ends
+    * inclusive, END_TIME unconstrained — ParameterDataRepository.java:65-67),
+    * ORDER BY paramIndex, startTime, decompress payload to text.
+    *
+    * `maxPayloadBytes` (engine extension, default unbounded = reference
+    * parity) bounds each row's INFLATED size: the reference only ever
+    * inflates its own trusted writes (util/GzipUtil.java:19-31), but an
+    * export over third-party ingested traces must not let one hostile
+    * high-ratio payload kill an executor. Strict semantics, matching the
+    * reference's abort-on-corrupt policy: an over-budget row fails the
+    * export. */
   def export(
       trace: DataFrame,
       ids: Seq[Long],

@@ -1,10 +1,9 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -248,39 +247,19 @@ private[graft] object ShardBloom {
   def bloomPath(dir: Path): Path = new Path(dir, FileName)
 
   /** All sections of the sidecar (empty when absent). */
-  def readAll(fs: FileSystem, dir: Path): Seq[Bloom] = {
-    val p = bloomPath(dir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      parseAll(text, p)
-    }
-  }
+  def readAll(fs: FileSystem, dir: Path): Seq[Bloom] =
+    ShardPublish.readTextIfExists(fs, bloomPath(dir))
+      .fold(Seq.empty[Bloom])(parseAll(_, bloomPath(dir)))
 
   /** The FIRST section — the whole sidecar on a single-column table.
     * Multi-column-aware prune paths use [[readAll]] + a column find. */
   def readIfExists(fs: FileSystem, dir: Path): Option[Bloom] =
     readAll(fs, dir).headOption
 
-  def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, b: Bloom): Unit =
-    writeAllAtomic(conf, fs, dir, Seq(b))
-
   def writeAllAtomic(
       conf: Configuration, fs: FileSystem, dir: Path,
-      sections: Seq[Bloom]): Unit = {
-    val p = bloomPath(dir)
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serializeAll(sections).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      sections: Seq[Bloom]): Unit =
+    ShardPublish.writeAtomic(conf, fs, bloomPath(dir), serializeAll(sections))
 
   /**
    * Bloom-prune `manifested` down to the shards that might contain a

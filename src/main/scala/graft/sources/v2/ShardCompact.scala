@@ -16,18 +16,12 @@ import org.apache.spark.sql.types.StructType
  * Crash safety comes ENTIRELY from the existing manifest contract — at
  * every instant `_MANIFEST` names a complete, self-consistent shard
  * set, and files it does not name are invisible orphans to
- * [[ShardReader]]:
- *
- *  1. the manifested rows are rewritten as `targetShards` consolidated
- *     shards through the sink's own two-phase commit, into a scratch
- *     subdirectory (its shards and manifest are not yet visible);
- *  2. the new shards are renamed into the table directory (UUID names
- *     cannot collide) — still orphans at this point;
- *  3. ONE atomic manifest publish ([[ShardManifest.writeAtomic]])
- *     switches readers from the old shard set to the new one;
- *  4. old shards and scratch are deleted — best-effort cleanup of
- *     what are now orphans; a crash anywhere before (3) leaves the old
- *     table intact, after (3) the new one, never a mix.
+ * [[ShardReader]]. The manifested rows are rewritten as `targetShards`
+ * consolidated shards through the sink's own two-phase commit into an
+ * invisible scratch subdirectory, and
+ * [[ShardPublish.switchCopyOnWrite]] publishes them with every old shard
+ * replaced: a crash anywhere before its manifest publish leaves the old
+ * table intact, after it the new one, never a mix.
  *
  * Concurrency is the [[ShardLock]] structural guarantee — the sink's
  * job commit takes the same lock, so a compaction cannot interleave
@@ -59,31 +53,28 @@ object ShardCompact {
     require(targetShards >= 1, s"targetShards must be >= 1: $targetShards")
     sortBy.foreach(c => require(schema.fieldNames.contains(c),
       s"sortBy column '$c' not in table schema ${schema.fieldNames.mkString(",")}"))
-    ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing to compact")
-    val old = ShardManifest.read(fs, mfPath)
-    ShardSchema.requireCovers(fs, dir, schema, "compact")
+    ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
+    val (dir, fs) = (t.dir, t.fs)
+    val tableSchema = ShardSchema.readIfExists(fs, dir)
+    ShardSchema.requireCovers(tableSchema, dir, schema, "compact")
     // live merge-on-read tombstones force the rewrite even on an
     // already-compact table: compaction IS their materialization step
     // ([[ShardTombstones]]) — early-returning would leave a 1-shard
     // table's deferred deletes logical forever
-    val liveTombs = ShardTombstones.readIfExists(fs, dir).isDefined
-    if (old.size <= targetShards && !liveTombs) return old.size
-    val statsSections = ShardStats.readAll(fs, dir)
-    val bloomSections = ShardBloom.readAll(fs, dir)
-    val statsCols = statsSections.map(_.column)
-    val bloomMeta = bloomSections.map(b => (b.column, b.mBits))
+    val tombs = ShardTombstones.readIfExists(fs, dir)
+    if (old.size <= targetShards && tombs.isEmpty) return old.size
+    val tableStats = ShardStats.readAll(fs, dir)
+    val tableBloom = ShardBloom.readAll(fs, dir)
     // range layout keys on the FIRST stats column (the table's primary
     // prune axis by convention); secondary sidecars re-collect on the
     // new layout like any append
-    val layoutCol = sortBy.orElse(statsCols.headOption)
+    val layoutCol = sortBy.orElse(tableStats.headOption.map(_.column))
 
-    // (1) consolidate through the sink's own two-phase commit, into a
-    // scratch dir whose content is invisible to readers of `path`
+    // consolidate into a scratch dir whose content is invisible to
+    // readers of `path`. The rewrite consumes [[ShardReader.read]],
+    // which applies every live tombstone, so the switch retires ALL
+    // segments (their files stay on disk for snapshot readers until
+    // vacuum), and the fresh stats/bloom become the whole sidecars.
     val scratch = new Path(dir, s"_compact-${UUID.randomUUID().toString.take(8)}")
     val in = ShardReader.read(spark, path, schema)
     val shaped = layoutCol match {
@@ -93,67 +84,10 @@ object ShardCompact {
         in.coalesce(1).sortWithinPartitions(org.apache.spark.sql.functions.col(c))
       case None => in.repartition(targetShards)
     }
-    val w0 = shaped
-      .write.format("graft.sources.v2.ShardSink")
-      .option("path", scratch.toString).mode("append")
-      .option(ShardPayload.OptionKey, ShardPayload.of(fs, dir))
-    val w1 =
-      if (statsCols.isEmpty) w0
-      else w0.option(ShardStats.OptionKey, statsCols.mkString(","))
-    (if (bloomMeta.isEmpty) w1
-     else w1.option(ShardBloom.OptionKey, bloomMeta.map(_._1).mkString(","))
-       .option(ShardBloom.BitsOptionKey,
-         bloomMeta.map(_._2.toString).mkString(","))).save()
-    val fresh = ShardManifest.read(fs, new Path(scratch, ShardManifest.FileName))
-
-    // (2) orphan-in the new shards
-    fresh.foreach { case (name, _) =>
-      val src = new Path(scratch, name)
-      val dst = new Path(dir, name)
-      if (!fs.rename(src, dst) && !(fs.exists(dst) && !fs.exists(src)))
-        throw new java.io.IOException(s"compact rename failed: $src -> $dst")
-    }
-
-    // (3) the atomic switch
-    ShardManifest.writeAtomic(spark.sessionState.newHadoopConf(), fs, mfPath, fresh)
-    // the rewrite consumed [[ShardReader.read]], which applied every
-    // live tombstone — ALL segments are materialized now and retire;
-    // their files stay on disk for snapshot readers until vacuum
-    ShardTombstones.clearAll(spark.sessionState.newHadoopConf(), fs, dir)
-    // every old shard is replaced — the fresh stats (collected by the
-    // scratch write, every section) become the whole `_STATS`
-    if (statsCols.nonEmpty) {
-      val freshNames = fresh.map(_._1).toSet
-      val scratchSections = ShardStats.readAll(fs, scratch)
-      if (scratchSections.nonEmpty)
-        ShardStats.writeAllAtomic(spark.sessionState.newHadoopConf(), fs, dir,
-          scratchSections.map(s => s.copy(
-            ranges = s.ranges.view.filterKeys(freshNames.contains).toMap)))
-    }
-    // same wholesale replacement for the bloom sidecar: the scratch
-    // write re-collected per-shard filters on the same columns/geometry
-    if (bloomMeta.nonEmpty) {
-      val freshNames = fresh.map(_._1).toSet
-      val scratchSections = ShardBloom.readAll(fs, scratch)
-      if (scratchSections.nonEmpty)
-        ShardBloom.writeAllAtomic(spark.sessionState.newHadoopConf(), fs, dir,
-          scratchSections.map(b => b.copy(
-            filters = b.filters.view.filterKeys(freshNames.contains).toMap)))
-    }
-
-    // (4) old shards are orphans now — best-effort cleanup. Never
-    // delete a name the fresh manifest also claims: shard names are
-    // UUID-unique in practice, but deleting a just-published shard on
-    // a name collision would leave the manifest pointing at nothing.
-    // Shards a live snapshot pins stay on disk (invisible orphans to
-    // current readers, the time-travel view for [[ShardSnapshot.read]])
-    // until their pins lapse and a vacuum reclaims them.
-    val keep = fresh.map(_._1).toSet ++ ShardSnapshot.pinned(spark, path)
-    old.foreach { case (name, _) =>
-      if (!keep.contains(name)) fs.delete(new Path(dir, name), false)
-    }
-    fs.delete(scratch, true)
-    fresh.size
+    ShardPublish.writeScratch(shaped, scratch, tableStats, tableBloom,
+      tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl))
+    ShardPublish.switchCopyOnWrite(t, old, old.map(_._1).toSet,
+      scratch, tableStats, tableBloom, tombs).size
     }
   }
 }

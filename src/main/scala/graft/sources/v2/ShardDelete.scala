@@ -27,25 +27,18 @@ import org.apache.spark.sql.types.StructType
  * scan of every shard — correct, just un-pruned. Untouched shards keep
  * their manifest entries and are never read again.
  *
- * Crash safety is ENTIRELY the manifest contract, same four steps as
- * [[ShardCompact.compact]]:
- *
- *  1. survivors of the hit shards are rewritten through the sink's own
- *     two-phase commit into a scratch subdirectory (invisible);
- *  2. the new shards are renamed into the table directory (UUID names
- *     cannot collide) — still orphans;
- *  3. ONE atomic manifest publish switches readers from (all old
- *     shards) to (untouched old shards + rewritten shards);
- *  4. the replaced shards and scratch are deleted — best-effort
- *     cleanup of what are now orphans.
- *
- * A crash before (3) leaves the table untouched (the delete simply has
- * not happened; re-run to converge — scratch dirs are UUID-fresh, and
- * stale ones are invisible orphans). A crash after (3) leaves the
- * delete APPLIED with orphan data files at worst; a re-run then
- * matches nothing and is a no-op. Deleted rows remain on disk until
- * step (4) (and until a physical `fs.delete` completes) — a compliance
- * pipeline should verify cleanup, as with any copy-on-write store.
+ * Crash safety is ENTIRELY the manifest contract: survivors of the hit
+ * shards are rewritten through the sink's own two-phase commit into an
+ * invisible scratch subdirectory, and [[ShardPublish.switchCopyOnWrite]]
+ * (shared with [[ShardCompact.compact]], which holds the publish order)
+ * switches readers from (all old shards) to (untouched old shards +
+ * rewritten shards) in ONE atomic manifest publish. A crash before that
+ * publish leaves the table untouched (re-run to converge); a crash
+ * after it leaves the delete APPLIED with orphan data files at worst,
+ * and a re-run then matches nothing and is a no-op. Deleted rows remain
+ * on disk until the replaced shards are deleted (and until a physical
+ * `fs.delete` completes) — a compliance pipeline should verify cleanup,
+ * as with any copy-on-write store.
  *
  * Concurrency is the [[ShardLock]] structural guarantee (the sink's
  * commit takes the same lock, so even an append cannot interleave with
@@ -67,84 +60,12 @@ object ShardDelete {
       schema: StructType,
       keyCol: String,
       keys: DataFrame): Seq[String] = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val old = ShardManifest.read(fs, mfPath)
+    val t = ShardPublish.table(spark, path)
+    val old = ShardPublish.manifest(t)
     val keyDf = keys.select(keys.columns.head).distinct()
       .withColumnRenamed(keys.columns.head, "__k")
-    ShardPrune.candidateShards(spark, fs, dir,
+    ShardPrune.candidateShards(spark, t.fs, t.dir,
       schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
-  }
-
-  /** Rewrite the table's `_STATS` after a copy-on-write publish: every
-    * SECTION drops the replaced shards' entries and merges the fresh
-    * shards' from the scratch write's matching section. No-op when the
-    * table has no stats. */
-  private def mergeStats(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path,
-      scratch: Path,
-      replaced: Set[String],
-      fresh: Seq[(String, Long)],
-      tableStats: Seq[ShardStats.Stats]): Unit = {
-    if (tableStats.isEmpty) return
-    val freshNames = fresh.map(_._1).toSet
-    val scratchSections = ShardStats.readAll(fs, scratch)
-    val merged = tableStats.map { s =>
-      val scratchRanges = scratchSections.find(_.column == s.column)
-        .map(_.ranges.view.filterKeys(freshNames.contains).toMap)
-        .getOrElse(Map.empty)
-      s.copy(ranges = (s.ranges -- replaced) ++ scratchRanges)
-    }
-    ShardStats.writeAllAtomic(
-      spark.sessionState.newHadoopConf(), fs, dir, merged)
-  }
-
-  /** Rewrite the table's `_BLOOM` after a copy-on-write publish —
-    * [[mergeStats]]'s twin, section for section. */
-  private def mergeBloom(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path,
-      scratch: Path,
-      replaced: Set[String],
-      fresh: Seq[(String, Long)],
-      tableBloom: Seq[ShardBloom.Bloom]): Unit = {
-    if (tableBloom.isEmpty) return
-    val freshNames = fresh.map(_._1).toSet
-    val scratchSections = ShardBloom.readAll(fs, scratch)
-    val merged = tableBloom.map { b =>
-      val scratchFilters = scratchSections.find(_.column == b.column)
-        .map(_.filters.view.filterKeys(freshNames.contains).toMap)
-        .getOrElse(Map.empty)
-      b.copy(filters = (b.filters -- replaced) ++ scratchFilters)
-    }
-    ShardBloom.writeAllAtomic(
-      spark.sessionState.newHadoopConf(), fs, dir, merged)
-  }
-
-  /** The scratch write, carrying the table's stats/bloom options (ALL
-    * sections — comma lists) and payload format through so rewritten
-    * shards stay prunable on every column and the table stays
-    * format-homogeneous. */
-  private def writeScratch(
-      df: DataFrame, scratch: Path, statsCols: Seq[String],
-      bloomMeta: Seq[(String, Int)] = Nil,
-      fmt: String = ShardPayload.Jsonl): Unit = {
-    val w0 = df.write.format("graft.sources.v2.ShardSink")
-      .option("path", scratch.toString).mode("append")
-      .option(ShardPayload.OptionKey, fmt)
-    val w1 =
-      if (statsCols.isEmpty) w0
-      else w0.option(ShardStats.OptionKey, statsCols.mkString(","))
-    (if (bloomMeta.isEmpty) w1
-     else w1.option(ShardBloom.OptionKey, bloomMeta.map(_._1).mkString(","))
-       .option(ShardBloom.BitsOptionKey,
-         bloomMeta.map(_._2.toString).mkString(","))).save()
   }
 
   /**
@@ -164,13 +85,8 @@ object ShardDelete {
       s"key column '$keyCol' not in table schema ${schema.fieldNames.mkString(",")}")
     require(keys.columns.length == 1,
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
-    ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val old = ShardManifest.read(fs, mfPath)
+    ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
+    val (dir, fs) = (t.dir, t.fs)
     // ONE read per sidecar per operation (each readIfExists is a
     // metadata round trip on an object store), threaded to every
     // consumer below
@@ -196,8 +112,8 @@ object ShardDelete {
     // live merge-on-read tombstones apply BEFORE hit counting: rows a
     // deferred delete already removed logically must neither count as
     // deleted here nor be resurrected by the rewrite
-    val tagged = tombs.fold(tagged0)(t =>
-      ShardTombstones.minus(spark, dir, tagged0, t, Some("__shard")))
+    val tagged = tombs.fold(tagged0)(ts =>
+      ShardTombstones.minus(spark, dir, tagged0, ts, Some("__shard")))
 
     // ONE pass over the CANDIDATES finds the hit shards and their
     // per-shard match counts — ≤ shard-count rows on the driver, bounded
@@ -208,47 +124,19 @@ object ShardDelete {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     if (hitCounts.isEmpty) return 0L
     val deleted = hitCounts.values.sum
-    val statsCol = tableStats.map(_.column)
-    val bloomMeta = tableBloom.map(b => (b.column, b.mBits))
 
-    // (1) rewrite ONLY the hit shards' survivors, invisible scratch
+    // rewrite ONLY the hit shards' survivors into invisible scratch,
+    // then switch. Snapshot-pinned replaced shards stay on disk (the
+    // [[ShardSnapshot]] compliance note: a takedown's bytes survive
+    // until the pinning snapshots are dropped and vacuumed)
     val scratch = new Path(dir, s"_delete-${UUID.randomUUID().toString.take(8)}")
-    writeScratch(
+    ShardPublish.writeScratch(
       tagged.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
         .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
         .drop("__shard"),
-      scratch, statsCol, bloomMeta, fmtD)
-    val fresh = ShardManifest.read(fs, new Path(scratch, ShardManifest.FileName))
-      .filter(_._2 > 0L) // fully-deleted partitions leave empty shards behind
-
-    // (2) orphan-in the rewritten shards
-    fresh.foreach { case (name, _) =>
-      val src = new Path(scratch, name)
-      val dst = new Path(dir, name)
-      if (!fs.rename(src, dst) && !(fs.exists(dst) && !fs.exists(src)))
-        throw new java.io.IOException(s"delete rename failed: $src -> $dst")
-    }
-
-    // (3) the atomic switch: untouched shards keep their entries
-    val kept = old.filterNot { case (name, _) => hitCounts.contains(name) }
-    ShardManifest.writeAtomic(
-      spark.sessionState.newHadoopConf(), fs, mfPath, kept ++ fresh)
-    mergeStats(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableStats)
-    mergeBloom(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableBloom)
-    // rewritten shards had the live tombstones applied — their names
-    // leave every segment's scope (segments that empty are retired)
-    ShardTombstones.dropShards(
-      spark.sessionState.newHadoopConf(), fs, dir, hitCounts.keySet)
-
-    // (4) replaced shards are orphans now — best-effort cleanup, except
-    // shards a live snapshot pins (the [[ShardSnapshot]] time-travel
-    // view; compliance note there — a takedown's bytes survive until
-    // the pinning snapshots are dropped and vacuumed)
-    val keepDel = fresh.map(_._1).toSet ++ ShardSnapshot.pinned(spark, path)
-    hitCounts.keys.foreach { name =>
-      if (!keepDel.contains(name)) fs.delete(new Path(dir, name), false)
-    }
-    fs.delete(scratch, true)
+      scratch, tableStats, tableBloom, fmtD)
+    ShardPublish.switchCopyOnWrite(t, old, hitCounts.keySet, scratch,
+      tableStats, tableBloom, tombs)
     deleted
     }
   }
@@ -289,32 +177,26 @@ object ShardDelete {
       s"key column '$keyCol' not in table schema ${schema.fieldNames.mkString(",")}")
     require(keys.columns.length == 1,
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
-    ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing has been committed there")
-    val old = ShardManifest.read(fs, mfPath)
+    ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
+    val (dir, fs) = (t.dir, t.fs)
     ShardSchema.requireCovers(
       ShardSchema.readIfExists(fs, dir), dir, schema, "deleteByKeyDeferred")
     if (old.isEmpty) return 0L
     val keyType = schema(keyCol).dataType
     val tag = ShardSchema.tagOf(keyType)
     val prior = ShardTombstones.readIfExists(fs, dir)
-    prior.foreach(t => require(t.column == keyCol && t.tag == tag,
-      s"table at $path already carries tombstones on '${t.column}' " +
-        s"(${t.tag}); compact to materialize them before deferring " +
+    prior.foreach(ts => require(ts.column == keyCol && ts.tag == tag,
+      s"table at $path already carries tombstones on '${ts.column}' " +
+        s"(${ts.tag}); compact to materialize them before deferring " +
         s"deletes on '$keyCol' ($tag)"))
     ShardTombstones.writeSegment(spark, fs, dir, keyCol, keyType, keys) match {
       case None => 0L
       case Some((file, n)) =>
         val seg = ShardTombstones.Segment(file, n, old.map(_._1).toSet)
         val merged = prior
-          .map(t => t.copy(segments = t.segments :+ seg))
+          .map(ts => ts.copy(segments = ts.segments :+ seg))
           .getOrElse(ShardTombstones.Tombstones(keyCol, tag, Seq(seg)))
-        ShardTombstones.writeAtomic(
-          spark.sessionState.newHadoopConf(), fs, dir, merged)
+        ShardTombstones.writeAtomic(t.conf, fs, dir, merged)
         n
     }
     }
@@ -356,13 +238,8 @@ object ShardDelete {
     require(updates.columns.toSeq == schema.fieldNames.toSeq,
       s"updates must carry the table schema ${schema.fieldNames.mkString(",")}" +
         s" in order, got ${updates.columns.mkString(",")}")
-    ShardLock.withLock(spark, path, leaseMs) {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val old = ShardManifest.read(fs, mfPath)
+    ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
+    val (dir, fs) = (t.dir, t.fs)
     val tableSchema = ShardSchema.readIfExists(fs, dir)
     val tableStats = ShardStats.readAll(fs, dir)
     val tableBloom = ShardBloom.readAll(fs, dir)
@@ -402,8 +279,8 @@ object ShardDelete {
         // tombstones apply before hit counting (deleteByKey's rationale);
         // the upsert's own NEW rows land in fresh shards outside every
         // segment's scope, so re-inserting a tombstoned key just works
-        tombsU.fold(t0)(t =>
-          ShardTombstones.minus(spark, dir, t0, t, Some("__shard")))
+        tombsU.fold(t0)(ts =>
+          ShardTombstones.minus(spark, dir, t0, ts, Some("__shard")))
       }
     // per-shard hit counts AND the global matched-key count in ONE
     // rollup action (r19): the grand-total row carries the global
@@ -419,47 +296,20 @@ object ShardDelete {
       .map(r => (r.getString(0), r.getLong(1))).toMap
     val replaced = hitCounts.values.sum
     val matchedKeys = hitAgg.find(_.isNullAt(0)).map(_.getLong(2)).getOrElse(0L)
-    val statsCol = tableStats.map(_.column)
-    val bloomMeta = tableBloom.map(b => (b.column, b.mBits))
 
-    // (1) survivors of the hit shards + ALL update rows, rewritten
-    // through the sink's own two-phase commit into invisible scratch
-    // (two appends — the sink's manifest read-merge-write unions them)
+    // survivors of the hit shards + ALL update rows, rewritten in ONE
+    // append through the sink's own two-phase commit into invisible
+    // scratch, then switched
     val scratch = new Path(dir, s"_upsert-${UUID.randomUUID().toString.take(8)}")
-    if (hitCounts.nonEmpty)
-      writeScratch(
-        tagged.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
-          .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
-          .drop("__shard"),
-        scratch, statsCol, bloomMeta, fmtU)
-    writeScratch(up, scratch, statsCol, bloomMeta, fmtU)
-    val fresh = ShardManifest.read(fs, new Path(scratch, ShardManifest.FileName))
-      .filter(_._2 > 0L)
-
-    // (2) orphan-in the rewritten + inserted shards
-    fresh.foreach { case (name, _) =>
-      val src = new Path(scratch, name)
-      val dst = new Path(dir, name)
-      if (!fs.rename(src, dst) && !(fs.exists(dst) && !fs.exists(src)))
-        throw new java.io.IOException(s"upsert rename failed: $src -> $dst")
-    }
-
-    // (3) the atomic switch: untouched shards keep their entries
-    val kept = old.filterNot { case (name, _) => hitCounts.contains(name) }
-    ShardManifest.writeAtomic(
-      spark.sessionState.newHadoopConf(), fs, mfPath, kept ++ fresh)
-    mergeStats(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableStats)
-    mergeBloom(spark, fs, dir, scratch, hitCounts.keySet, fresh, tableBloom)
-    ShardTombstones.dropShards(
-      spark.sessionState.newHadoopConf(), fs, dir, hitCounts.keySet)
-
-    // (4) replaced shards are orphans now — best-effort cleanup, except
-    // snapshot-pinned shards (see [[ShardSnapshot]])
-    val keepUp = fresh.map(_._1).toSet ++ ShardSnapshot.pinned(spark, path)
-    hitCounts.keys.foreach { name =>
-      if (!keepUp.contains(name)) fs.delete(new Path(dir, name), false)
-    }
-    fs.delete(scratch, true)
+    val rows =
+      if (hitCounts.isEmpty) up
+      else tagged.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
+        .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
+        .drop("__shard")
+        .unionByName(up)
+    ShardPublish.writeScratch(rows, scratch, tableStats, tableBloom, fmtU)
+    ShardPublish.switchCopyOnWrite(t, old, hitCounts.keySet, scratch,
+      tableStats, tableBloom, tombsU)
     (replaced, nUpdates - matchedKeys)
     }
   }

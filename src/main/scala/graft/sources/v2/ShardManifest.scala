@@ -1,9 +1,6 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.Path
 
 /**
  * THE parser/serializer for `_MANIFEST` (one `name\trows` line per
@@ -14,9 +11,9 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
  * next generation of the manifest; the reader must never silently skip
  * a shard).
  *
- * Publication is atomic: [[writeAtomic]] stages the new manifest
- * beside the old one and `FileContext.rename(OVERWRITE)`s it into
- * place — a crash mid-publish leaves the PREVIOUS manifest intact, so
+ * Publication is atomic: [[ShardPublish.writeAtomic]] stages the new
+ * manifest beside the old one and `FileContext.rename(OVERWRITE)`s it
+ * into place — a crash mid-publish leaves the PREVIOUS manifest intact, so
  * previously committed shards can never be un-published by a torn
  * in-place rewrite (the same atomic-rename discipline the shard files
  * themselves use).
@@ -40,26 +37,4 @@ private[v2] object ShardManifest {
   def serialize(entries: Seq[(String, Long)]): String =
     entries.map { case (name, rows) => s"$name\t$rows" }
       .mkString("", "\n", if (entries.isEmpty) "" else "\n")
-
-  def read(fs: FileSystem, mfPath: Path): Seq[(String, Long)] = {
-    val in = fs.open(mfPath)
-    val text = try {
-      new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-    } finally in.close()
-    parse(text, mfPath)
-  }
-
-  def writeAtomic(
-      conf: Configuration,
-      fs: FileSystem,
-      mfPath: Path,
-      entries: Seq[(String, Long)]): Unit = {
-    val tmp = new Path(mfPath.getParent, s"${FileName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serialize(entries).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(mfPath.toUri, conf)
-      .rename(tmp, mfPath, Options.Rename.OVERWRITE)
-  }
 }

@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -28,14 +26,8 @@ import org.apache.spark.sql.types.StructType
 object ShardReader {
 
   private def manifestEntries(
-      spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing has been committed there")
-    ShardManifest.read(fs, mfPath)
-  }
+      spark: SparkSession, path: String): Seq[(String, Long)] =
+    ShardPublish.manifest(ShardPublish.table(spark, path))
 
   /** Read exactly the manifested shards under `path` with the given
     * schema (JSONL shards carry no embedded schema; the writer's schema
@@ -44,15 +36,15 @@ object ShardReader {
     * [[ShardDelete.deleteByKeyDeferred]]) are anti-joined out — zero
     * overhead when none are live. */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val t = ShardPublish.table(spark, path)
+    val (dir, fs) = (t.dir, t.fs)
     // _TOMBSTONES BEFORE _MANIFEST (r18 ADVICE): the non-atomic pair
-    // must never capture a pre-rewrite manifest with a post-dropShards
+    // must never capture a pre-rewrite manifest with a post-switch
     // sidecar (a pinned replaced shard would serve without its scope —
     // silent key resurrection). Scopes only shrink, so the inverted
     // skew is the safe direction. Same ordering as ShardScanMeta.load.
     val tomb = ShardTombstones.readIfExists(fs, dir)
-    val files = manifestEntries(spark, path)
+    val files = ShardPublish.manifest(t)
       .map { case (name, _) => new Path(dir, name).toString }
     val base = ShardPayload.read(spark, schema, ShardPayload.of(fs, dir), files)
     tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
@@ -64,9 +56,8 @@ object ShardReader {
     * schema argument of [[read]] made unnecessary. Fails loud on a
     * pre-schema table (pass the schema explicitly there). */
   def tableSchema(spark: SparkSession, path: String): StructType = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ShardSchema.readIfExists(fs, dir).getOrElse(throw new
+    val t = ShardPublish.table(spark, path)
+    ShardSchema.readIfExists(t.fs, t.dir).getOrElse(throw new
         IllegalArgumentException(
           s"no ${ShardSchema.FileName} under $path — a pre-evolution " +
             "table; pass the schema explicitly to read()"))
@@ -115,8 +106,8 @@ object ShardReader {
       s"key column '$keyCol' not in table schema ${schema.fieldNames.mkString(",")}")
     require(keys.columns.length == 1,
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val t = ShardPublish.table(spark, path)
+    val (dir, fs) = (t.dir, t.fs)
     val keyType = schema(keyCol).dataType
     val rawKeys = keys.select(keys.columns.head).distinct()
       .withColumnRenamed(keys.columns.head, "__k")
@@ -143,7 +134,7 @@ object ShardReader {
       // input_file_name(), which only resolves below the first exchange
       tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
     }
-    val names = manifestEntries(spark, path).map(_._1)
+    val names = ShardPublish.manifest(t).map(_._1)
     if (small) {
       val castVals = few.map(_.get(1)).filter(_ != null).distinct.toSeq
       val candidates = ShardPrune.candidateShardsLocal(

@@ -231,17 +231,18 @@ private[v2] object ShardScanMeta {
     val mfPath = new Path(dir, ShardManifest.FileName)
     // _TOMBSTONES is read BEFORE _MANIFEST (r18 ADVICE): the two reads
     // are not atomic, and a reader racing a copy-on-write mutator that
-    // captured the PRE-rewrite manifest with the POST-dropShards
+    // captured the PRE-rewrite manifest with the POST-switch
     // sidecar could serve a snapshot-pinned replaced shard WITHOUT its
     // tombstone scope — silently resurrecting deleted keys. Scopes only
     // ever SHRINK, so the inverted skew (stale tombstones + fresh
     // manifest) is safe: at worst a scope names a shard the manifest no
     // longer lists, and the anti-join predicate matches nothing.
     val tombstones = ShardTombstones.readIfExists(fs, dir)
-    val exists = fs.exists(mfPath)
+    val manifest = ShardPublish.readTextIfExists(fs, mfPath)
     ShardScanMeta(
-      manifestExists = exists,
-      entries = if (exists) ShardManifest.read(fs, mfPath) else Nil,
+      manifestExists = manifest.isDefined,
+      entries = manifest.fold(Seq.empty[(String, Long)])(
+        ShardManifest.parse(_, mfPath)),
       stats = ShardStats.readAll(fs, dir),
       bloom = ShardBloom.readAll(fs, dir),
       tombstones = tombstones,

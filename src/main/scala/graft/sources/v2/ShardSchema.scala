@@ -1,9 +1,7 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types._
 
 /**
@@ -108,29 +106,13 @@ private[graft] object ShardSchema {
 
   def schemaPath(dir: Path): Path = new Path(dir, FileName)
 
-  def readIfExists(fs: FileSystem, dir: Path): Option[TableSchema] = {
-    val p = schemaPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      Some(parse(text, p))
-    }
-  }
+  def readIfExists(fs: FileSystem, dir: Path): Option[TableSchema] =
+    ShardPublish.readTextIfExists(fs, schemaPath(dir))
+      .map(parse(_, schemaPath(dir)))
 
   def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, ts: TableSchema): Unit = {
-    val p = schemaPath(dir)
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serialize(ts).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      conf: Configuration, fs: FileSystem, dir: Path, ts: TableSchema): Unit =
+    ShardPublish.writeAtomic(conf, fs, schemaPath(dir), serialize(ts))
 
   /** Guard for the copy-on-write maintenance operators: their caller
     * schema must COVER the table's `_SCHEMA` (every evolved column

@@ -390,8 +390,8 @@ private[v2] class ShardBatchWrite(
     // the rows already durably committed and visible to readers (the
     // worst of both worlds).
     val mfPath = new Path(target, ShardManifest.FileName)
-    val prior: Seq[(String, Long)] =
-      if (f.exists(mfPath)) ShardManifest.read(f, mfPath) else Nil
+    val prior: Seq[(String, Long)] = ShardPublish.readTextIfExists(f, mfPath)
+      .fold(Seq.empty[(String, Long)])(ShardManifest.parse(_, mfPath))
     // per-column sidecar compatibility (authoritative; plan time
     // re-checks best-effort): a column's stats dtype / bloom geometry
     // can never change; additional columns open new sections
@@ -456,20 +456,15 @@ private[v2] class ShardBatchWrite(
               (fd.name, ShardSchema.tagOf(fd.dataType))), fmt))
     }
     val existing = prior.map(_._1).toSet
-    val fresh = messages.toSeq.flatMap { case ShardCommit(staged, rows, _, _) =>
-      val src = new Path(staged)
-      val dst = new Path(target, src.getName)
-      // A retried commit (or one resumed after a crash between the
-      // renames and the manifest write) finds src already moved: rename
-      // then returns false with dst present and src gone. That state IS
-      // the rename's postcondition — treat it as success so the retry
-      // reaches the manifest write and restores reader visibility,
-      // which is what makes the idempotency claim above actually hold.
-      if (!f.rename(src, dst) && !(f.exists(dst) && !f.exists(src)))
-        throw new java.io.IOException(s"commit rename failed: $src -> $dst")
-      if (existing.contains(src.getName)) None else Some((src.getName, rows))
-    }
-    ShardManifest.writeAtomic(conf.value, f, mfPath, prior ++ fresh)
+    val staged = messages.toSeq.map { case c: ShardCommit => c }
+    // idempotent under a retried or crash-resumed commit (see moveIn),
+    // which is what makes the idempotency claim above actually hold
+    ShardPublish.moveIn(f, staged.map(c => new Path(c.stagedPath)), target,
+      "commit")
+    val fresh = staged.map(c => (new Path(c.stagedPath).getName, c.rows))
+      .filterNot { case (name, _) => existing.contains(name) }
+    ShardPublish.writeAtomic(conf.value, f, mfPath,
+      ShardManifest.serialize(prior ++ fresh))
     // stats AFTER the manifest: a crash between the two leaves fresh
     // shards manifested but stats-less — they degrade to un-pruned scan
     // candidates, never to a wrong prune. Per-COLUMN section merge:

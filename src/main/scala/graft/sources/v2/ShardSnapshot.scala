@@ -51,13 +51,9 @@ object ShardSnapshot {
     (dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
   }
 
-  private def readHwm(fs: FileSystem, dir: Path): Int = {
-    val p = new Path(dir, HwmFile)
-    if (!fs.exists(p)) 0
-    else scala.util.Using.resource(fs.open(p)) { in =>
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-    }
-  }
+  private def readHwm(fs: FileSystem, dir: Path): Int =
+    ShardPublish.readTextIfExists(fs, new Path(dir, HwmFile))
+      .fold(0)(_.trim.toInt)
 
   /** The persistent version high-water mark (0 before the first
     * snapshot) — the "versions ≤ this existed before now" marker
@@ -85,49 +81,36 @@ object ShardSnapshot {
     * lines follow. */
   def create(spark: SparkSession, path: String,
       leaseMs: Long = ShardLock.DefaultLeaseMs): Int =
-    ShardLock.withLock(spark, path, leaseMs) {
-    val (fs, dir) = fsFor(spark, path)
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val entries = ShardManifest.read(fs, mfPath)
+    ShardPublish.locked(spark, path, leaseMs) { (t, entries) =>
+    val (fs, dir) = (t.fs, t.dir)
     // max(live) still participates: a pre-hwm table (or a hand-restored
     // snapshot file) must never be overwritten by a lower-counted hwm
-    val v = (readHwm(fs, dir) +: 0 +: list(spark, path)).max + 1
+    val v = (readHwm(fs, dir) +: 0 +: list(fs, dir)).max + 1
     // hwm FIRST (staged rename, crash-safe): a crash between the two
     // writes burns a version number, never reuses one
-    val hwmTmp = new Path(dir, s"$HwmFile.tmp")
-    val hout = fs.create(hwmTmp, true)
-    try hout.write(v.toString.getBytes("UTF-8"))
-    finally hout.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dir.toUri, spark.sessionState.newHadoopConf())
-      .rename(hwmTmp, new Path(dir, HwmFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    ShardPublish.writeAtomic(t.conf, fs, new Path(dir, HwmFile), v.toString)
     // live merge-on-read tombstones are PART of the snapshot's logical
     // content: record them (name + scope) as headers so this version
     // keeps excluding the deferred-deleted keys even after a compaction
     // has materialized and retired the segments ([[ShardTombstones]])
-    val tombHeader = ShardTombstones.readIfExists(fs, dir).map { t =>
-      s"#tombkey\t${t.column}\t${t.tag}\n" + t.segments.map(s =>
+    val tombHeader = ShardTombstones.readIfExists(fs, dir).map { ts =>
+      s"#tombkey\t${ts.column}\t${ts.tag}\n" + ts.segments.map(s =>
         s"#tomb\t${s.file}\t${s.nKeys}\t${s.shards.toSeq.sorted.mkString(",")}\n")
         .mkString
     }.getOrElse("")
-    val tmp = new Path(dir, s"$Prefix$v.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      (s"#ts\t${System.currentTimeMillis()}\n" + tombHeader +
-        ShardManifest.serialize(entries)).getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(dir, s"$Prefix$v")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"snapshot publish failed: $tmp -> $dst")
+    ShardPublish.writeAtomic(t.conf, fs, new Path(dir, s"$Prefix$v"),
+      s"#ts\t${System.currentTimeMillis()}\n" + tombHeader +
+        ShardManifest.serialize(entries))
     v
     }
 
   /** Live snapshot versions, ascending. */
   def list(spark: SparkSession, path: String): Seq[Int] = {
     val (fs, dir) = fsFor(spark, path)
+    list(fs, dir)
+  }
+
+  private def list(fs: FileSystem, dir: Path): Seq[Int] = {
     val st = fs.globStatus(new Path(dir, s"$Prefix*"))
     if (st == null) Seq.empty
     else st.toSeq.map(_.getPath.getName.stripPrefix(Prefix))
@@ -137,11 +120,8 @@ object ShardSnapshot {
   private def readSnapshotFile(fs: FileSystem, p: Path): (
       Option[Long], Seq[(String, Long)],
       Option[ShardTombstones.Tombstones]) = {
-    val in = fs.open(p)
-    val text = try {
-      new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    } finally in.close()
-    val (headers, body) = text.linesIterator.toSeq.partition(_.startsWith("#"))
+    val (headers, body) = ShardPublish.readText(fs, p).linesIterator.toSeq
+      .partition(_.startsWith("#"))
     val ts = headers.collectFirst {
       case h if h.startsWith("#ts\t") => h.stripPrefix("#ts\t").trim.toLong
     }
@@ -185,12 +165,10 @@ object ShardSnapshot {
   /** Every (shard, tombstone-segment) file some live snapshot pins —
     * ONE pass over the snapshot files for both sets (vacuum needs both;
     * reading them separately would parse every snapshot twice). */
-  private def pinnedAll(
-      spark: SparkSession, path: String): (Set[String], Set[String]) = {
-    val (fs, dir) = fsFor(spark, path)
+  private def pinnedAll(fs: FileSystem, dir: Path): (Set[String], Set[String]) = {
     val shards = Set.newBuilder[String]
     val tombs = Set.newBuilder[String]
-    list(spark, path).foreach { v =>
+    list(fs, dir).foreach { v =>
       val (_, es, t) = readSnapshotFile(fs, new Path(dir, s"$Prefix$v"))
       es.foreach { case (name, _) => shards += name }
       t.foreach(_.segments.foreach(s => tombs += s.file))
@@ -201,9 +179,13 @@ object ShardSnapshot {
   /** Every shard name some live snapshot pins — the set the
     * copy-on-write cleanup steps must not reclaim. Bounded by
     * snapshots × shards-per-snapshot manifest LINES, never data. */
-  def pinned(spark: SparkSession, path: String): Set[String] =
-    list(spark, path).iterator
-      .flatMap(v => entries(spark, path, v).iterator.map(_._1)).toSet
+  def pinned(spark: SparkSession, path: String): Set[String] = {
+    val (fs, dir) = fsFor(spark, path)
+    pinned(fs, dir)
+  }
+
+  private[v2] def pinned(fs: FileSystem, dir: Path): Set[String] =
+    pinnedAll(fs, dir)._1
 
   /** Read the table AS OF snapshot `v`. Fails loud — not empty — when a
     * pinned shard has been vacuumed away (only possible after the
@@ -257,13 +239,10 @@ object ShardSnapshot {
     * delete data the imminent publish is about to name. */
   def vacuum(spark: SparkSession, path: String,
       leaseMs: Long = ShardLock.DefaultLeaseMs): Seq[String] =
-    ShardLock.withLock(spark, path, leaseMs) {
-    val (fs, dir) = fsFor(spark, path)
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    require(fs.exists(mfPath),
-      s"no ${ShardManifest.FileName} under $path — nothing committed there")
-    val (pinnedShards, pinnedTombs) = pinnedAll(spark, path)
-    val live = ShardManifest.read(fs, mfPath).map(_._1).toSet ++
+    ShardPublish.locked(spark, path, leaseMs) { (t, manifest) =>
+    val (fs, dir) = (t.fs, t.dir)
+    val (pinnedShards, pinnedTombs) = pinnedAll(fs, dir)
+    val live = manifest.map(_._1).toSet ++
       pinnedShards ++
       // tombstone segments stay while the live sidecar names them or a
       // snapshot records them (snapshot reads re-apply; see

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
@@ -139,18 +139,9 @@ private[graft] object ShardStats {
   def statsPath(dir: Path): Path = new Path(dir, FileName)
 
   /** All sections of the sidecar (empty when absent). */
-  def readAll(fs: FileSystem, dir: Path): Seq[Stats] = {
-    val p = statsPath(dir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      parseAll(text, p)
-    }
-  }
+  def readAll(fs: FileSystem, dir: Path): Seq[Stats] =
+    ShardPublish.readTextIfExists(fs, statsPath(dir))
+      .fold(Seq.empty[Stats])(parseAll(_, statsPath(dir)))
 
   /** The FIRST section — the whole sidecar on a single-column table
     * (every pre-r18 table). Prune paths that must pick the right
@@ -159,21 +150,10 @@ private[graft] object ShardStats {
   def readIfExists(fs: FileSystem, dir: Path): Option[Stats] =
     readAll(fs, dir).headOption
 
-  def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, stats: Stats): Unit =
-    writeAllAtomic(conf, fs, dir, Seq(stats))
-
   def writeAllAtomic(
       conf: Configuration, fs: FileSystem, dir: Path,
-      sections: Seq[Stats]): Unit = {
-    val p = statsPath(dir)
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serializeAll(sections).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      sections: Seq[Stats]): Unit =
+    ShardPublish.writeAtomic(conf, fs, statsPath(dir), serializeAll(sections))
 
   /**
    * The shard names a keyed operation must READ — the manifest-level

@@ -1,10 +1,9 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -116,30 +115,14 @@ object ShardTombstones {
 
   def sidecarPath(dir: Path): Path = new Path(dir, FileName)
 
-  def readIfExists(fs: FileSystem, dir: Path): Option[Tombstones] = {
-    val p = sidecarPath(dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-      } finally in.close()
-      Some(parse(text, p))
-    }
-  }
+  def readIfExists(fs: FileSystem, dir: Path): Option[Tombstones] =
+    ShardPublish.readTextIfExists(fs, sidecarPath(dir))
+      .map(parse(_, sidecarPath(dir)))
 
   def writeAtomic(
-      conf: Configuration, fs: FileSystem, dir: Path, t: Tombstones): Unit = {
-    val p = sidecarPath(dir)
-    if (t.segments.isEmpty) { fs.delete(p, false); return } // clean table
-    val tmp = new Path(dir, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(serialize(t).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      conf: Configuration, fs: FileSystem, dir: Path, t: Tombstones): Unit =
+    if (t.segments.isEmpty) fs.delete(sidecarPath(dir), false) // clean table
+    else ShardPublish.writeAtomic(conf, fs, sidecarPath(dir), serialize(t))
 
   /** Live tombstone segment FILE names (for vacuum's live set). */
   def liveSegmentFiles(fs: FileSystem, dir: Path): Set[String] =
@@ -256,30 +239,5 @@ object ShardTombstones {
         "left_anti")
     }
     tagCol.fold(out.drop(dfTag))(_ => out)
-  }
-
-  // ---- maintenance-side scope remapping
-
-  /** Drop `replaced` shard names from every segment's scope (they were
-    * rewritten with tombstones applied); retire segments whose scope
-    * empties — their files become orphans for vacuum unless a snapshot
-    * pins them. Call under the table lock, after the manifest publish. */
-  private[v2] def dropShards(
-      conf: Configuration,
-      fs: FileSystem,
-      dir: Path,
-      replaced: Set[String]): Unit =
-    readIfExists(fs, dir).foreach { t =>
-      val remapped = t.segments
-        .map(s => s.copy(shards = s.shards -- replaced))
-        .filter(_.shards.nonEmpty)
-      writeAtomic(conf, fs, dir, t.copy(segments = remapped))
-    }
-
-  /** Retire EVERY segment — a compaction materialized them all. The
-    * files stay on disk for snapshot readers until vacuum. */
-  private[v2] def clearAll(
-      conf: Configuration, fs: FileSystem, dir: Path): Unit = {
-    fs.delete(sidecarPath(dir), false); ()
   }
 }
