@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Q
+
 /** Driver-run benchmark: every registered query at `SPARK_GRAFT_SF_DIR`.
   * Emits the full per-query JSON line to stdout AND to `BENCH_FULL.json`,
   * then a compact tail-window-safe headline line (totals + 20 slowest)
@@ -42,44 +44,23 @@ object Bench {
   }
   def jstr(s: String): String = "\"" + jesc(s) + "\""
 
+  /** The queries Bench times: every registered name (or those in `only`),
+    * each with its declared bench twin in place of the registered plan —
+    * e.g. the sketch queries, whose Verify forms add an exact
+    * countDistinct only so DuckDB can check the error bound. */
+  def selection(only: Option[Set[String]]): Map[String, Q.Fn] =
+    Queries.declarations.collect {
+      case q if only.forall(_.contains(q.name)) => q.name -> q.benchTwin.getOrElse(q.fn)
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default: the host's core count (a measured value, not a knob)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = LocalSession.cpus
     // optional arg: comma-separated query names (targeted local timing);
     // the driver passes no args and always measures the full set
     val only = args.headOption.map(_.split(",").toSet)
-    // The three sketch queries' registered (Verify) forms include an exact
-    // countDistinct so DuckDB can check the error bound; timing that form
-    // measures the exact-distinct exchange the sketch exists to avoid.
-    // Bench times sketch-only twins under the same names.
-    val benchOverrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "agg_approx_distinct" -> (graft.queries.AnalyticsQueries.aggApproxDistinctBench _),
-      "agg_hll_sketch" -> (graft.queries.AnalyticsQueries.aggHllSketchBench _),
-      "agg_hll_union" -> (graft.queries.AnalyticsQueries.aggHllUnionBench _))
-    // a rename in the registry must not leave an orphan override timing
-    // a stale twin under a name the Verify surface no longer carries
-    require(benchOverrides.keySet.subsetOf(SparkEntry.queries.keySet),
-      s"bench overrides for unregistered queries: " +
-        (benchOverrides.keySet -- SparkEntry.queries.keySet).mkString(", "))
-    val selected = (SparkEntry.queries ++ benchOverrides).filter {
-      case (name, _) => only.forall(_.contains(name))
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-optimize CACHED plan output partitioning: a cached
-      // model-state frame built under a broadcast join otherwise keeps
-      // the full shuffle width (e.g. 32 one-row partitions), and every
-      // one of an iterative consumer's passes pays per-task overhead x
-      // width for parameter-sized data; at real scale the coalesce
-      // target keeps wide plans wide (advisory-size based)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val selected = selection(only)
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Untimed warm-up pass at the smallest SF: JIT + codegen compile for

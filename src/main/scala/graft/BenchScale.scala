@@ -81,7 +81,7 @@ object BenchScale {
 
   /** (name, class) — `linear` expects CPU ∝ rows; `answer` expects
     * CPU ∝ output rows. All read only documents/embeddings. */
-  private val probes: Seq[(String, String)] = Seq(
+  private[graft] val probes: Seq[(String, String)] = Seq(
     "profile_documents" -> "linear",
     "text_bm25_topk" -> "linear",
     "quality_gopher" -> "linear",
@@ -299,7 +299,7 @@ object BenchScale {
    * run performs only candidate pruning + the candidate hit scan for a
    * FIXED low-range key set — the read cost a takedown pays.
    */
-  private val stageProbes: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] val stageProbes: Map[String, (SparkSession, String) => DataFrame] = Map(
     "shard_keyed_discovery" -> ((spark: SparkSession, dir: String) => {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val table = s"$dir/keyed_stage_table"
@@ -586,24 +586,8 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val srcSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SCALE_SWEEPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-optimize CACHED plan output partitioning: a cached
-      // model-state frame built under a broadcast join otherwise keeps
-      // the full shuffle width (e.g. 32 one-row partitions), and every
-      // one of an iterative consumer's passes pays per-task overhead x
-      // width for parameter-sized data; at real scale the coalesce
-      // target keeps wide plans wide (advisory-size based)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = LocalSession.builder().appName("graft-bench-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     writeCorpus(spark, srcSf, s"$workDir/x1", copies = 1)

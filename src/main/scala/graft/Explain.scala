@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print the formatted physical plan of selected
   * registered queries (all, with no name list) at a given fixture SF.
   * Usage: runMain graft.Explain <sfDir> [name,name,...] */
@@ -9,20 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-optimize CACHED plan output partitioning: a cached
-      // model-state frame built under a broadcast join otherwise keeps
-      // the full shuffle width (e.g. 32 one-row partitions), and every
-      // one of an iterative consumer's passes pays per-task overhead x
-      // width for parameter-sized data; at real scale the coalesce
-      // target keeps wide plans wide (advisory-size based)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.queries._
 
 /**
- * Central query registry: merges every query family. Each family is one
- * object per SURVEY.md §2 operator group; `Queries.all` is the driver's
- * verification surface, `Queries.oracles` its DuckDB twin.
+ * Central query registry: the declarations of every query family, one
+ * object per SURVEY.md §2 operator group. `Queries.all` (the
+ * verification surface), `Queries.oracles` (its DuckDB twin) and
+ * `Bench.selection` (what Bench times) are projections of that one list,
+ * so an oracle or a bench twin cannot outlive its query.
  *
  * Determinism rules shared by all families are documented on
  * [[graft.queries.QueryFamily]].
@@ -23,22 +23,19 @@ object Queries {
     PipelineQueries,
     RetrievalQueries)
 
-  // lazy vals, not defs: the registries are immutable and every access
-  // previously re-ran the merge + duplicate validation (Bench/Verify/
-  // Explain each touch these several times at startup)
-  lazy val all: Map[String, (SparkSession, String) => DataFrame] = {
-    val entries = families.flatMap(_.queries)
-    val dups = entries.groupBy(_._1).filter(_._2.size > 1).keys
+  // lazy vals, not defs: the registry is immutable and Bench/Verify/
+  // Explain each touch these several times at startup
+  lazy val declarations: Seq[Q] = {
+    val qs = families.flatMap(_.declarations)
+    val dups = qs.groupBy(_.name).filter(_._2.size > 1).keys
     require(dups.isEmpty,
       s"duplicate query names across families (later would silently win): ${dups.mkString(", ")}")
-    entries.toMap
+    qs
   }
 
-  lazy val oracles: Map[String, String] = {
-    val entries = families.flatMap(_.oracles)
-    val unknown = entries.map(_._1).filterNot(all.keySet)
-    require(unknown.isEmpty,
-      s"oracle entries without a matching query: ${unknown.mkString(", ")}")
-    entries.toMap
-  }
+  lazy val all: Map[String, Q.Fn] =
+    declarations.map(q => q.name -> q.fn).toMap
+
+  lazy val oracles: Map[String, String] =
+    declarations.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.TraceExport
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry-point contract — see SURVEY.md §7.
   *
-  * Every operator from SURVEY.md §2 appears as a `queries` entry; entries
-  * with ANSI-SQL-expressible semantics also carry a DuckDB oracle in
+  * Both maps are projections of the one declaration list in [[Queries]]:
+  * every operator from SURVEY.md §2 is a `queries` entry, and the entries
+  * whose declaration carries ANSI-SQL-expressible semantics also appear in
   * `oracleSql` (column names aligned on both sides — the driver sorts
   * columns by name and hash-compares values).
   */
@@ -31,8 +32,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** For each query declared with an oracle, equivalent ANSI SQL runnable
+    * by DuckDB on the same parquet tables; a subset of `queries` keys. */
   def oracleSql: Map[String, String] =
     Queries.oracles
 }

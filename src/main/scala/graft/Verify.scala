@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,22 +13,9 @@ object Verify {
           "usage: graft.Verify <sfDir> <outDir> [query1,query2,...]")
         sys.exit(1)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = LocalSession.builder()
       // µs parquet timestamps so DuckDB reads the artifact losslessly
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // let AQE re-optimize CACHED plan output partitioning: a cached
-      // model-state frame built under a broadcast join otherwise keeps
-      // the full shuffle width (e.g. 32 one-row partitions), and every
-      // one of an iterative consumer's passes pays per-task overhead x
-      // width for parameter-sized data; at real scale the coalesce
-      // target keeps wide plans wide (advisory-size based)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

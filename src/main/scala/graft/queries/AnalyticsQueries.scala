@@ -325,7 +325,7 @@ object AnalyticsQueries extends QueryFamily {
     * DuckDB can check the error bound — but timing those forms measures
     * the exact-distinct exchange the sketch path exists to avoid, so
     * bench deltas for the family would track the wrong plan. Bench
-    * substitutes these under the same names (`Bench.benchOverrides`);
+    * times these under the same names (each declaration's `benchTwin`);
     * Verify keeps the bounded-check forms. */
   def aggApproxDistinctBench(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
@@ -404,31 +404,8 @@ object AnalyticsQueries extends QueryFamily {
       .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
-  val queries: Map[String, QueryFn] = Map(
-    "q1_agg" -> (q1Agg _),
-    "agg_distinct" -> (aggDistinct _),
-    "agg_rollup" -> (aggRollup _),
-    "agg_cube" -> (aggCube _),
-    "agg_grouping_sets" -> (aggGroupingSets _),
-    "agg_stats" -> (aggStats _),
-    "agg_approx_quantiles" -> (aggApproxQuantiles _),
-    "agg_approx_distinct" -> (aggApproxDistinct _),
-    "agg_pivot" -> (aggPivot _),
-    "agg_unpivot" -> (aggUnpivot _),
-    "agg_topk_custom" -> (aggTopkCustom _),
-    "agg_hll_sketch" -> (aggHllSketch _),
-    "agg_hll_union" -> (aggHllUnion _),
-    "window_rank" -> (windowRank _),
-    "window_lag_lead" -> (windowLagLead _),
-    "window_running" -> (windowRunning _),
-    "window_moving" -> (windowMoving _),
-    "window_range_hour" -> (windowRangeHour _),
-    "sketch_cms_tokens" -> (sketchCmsTokens _),
-    "sketch_cms_tokens_unicode" -> (sketchCmsTokensUnicode _),
-    "window_ntile" -> (windowNtile _))
-
-  val oracles: Map[String, String] = Map(
-    "q1_agg" ->
+  val declarations: Seq[Q] = Seq(
+    Q("q1_agg", q1Agg _,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
@@ -439,44 +416,44 @@ object AnalyticsQueries extends QueryFamily {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_distinct" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Q("agg_distinct", aggDistinct _,
       """SELECT o_orderstatus,
         |  COUNT(DISTINCT o_custkey) AS n_customers,
         |  COUNT(1) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_rollup" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Q("agg_rollup", aggRollup _,
       """SELECT r_name, n_name, COUNT(1) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_bal
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin,
-    "agg_cube" ->
+        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin),
+    Q("agg_cube", aggCube _,
       """SELECT o_orderstatus, o_orderpriority, COUNT(1) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
         |FROM orders
         |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "agg_grouping_sets" ->
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    Q("agg_grouping_sets", aggGroupingSets _,
       """SELECT o_orderstatus, o_orderpriority, COUNT(1) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "agg_stats" ->
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    Q("agg_stats", aggStats _,
       """SELECT l_returnflag, COUNT(1) AS n,
         |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(1) AS mean_qty,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(1)
         |    - (CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(1))
         |      * (CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / COUNT(1)) AS var_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     // bounded-check oracles for the sketch family: the estimate is not
     // SQL-reproducible, but the exact side is, and the within-bound
     // verdict is constant TRUE — so the oracle verifies both
-    "sketch_cms_tokens" ->
+    Q("sketch_cms_tokens", sketchCmsTokens _,
       """SELECT token, n AS n_exact,
         |  TRUE AS no_underestimate, TRUE AS within_2eps
         |FROM (
@@ -486,10 +463,10 @@ object AnalyticsQueries extends QueryFamily {
         |      x -> len(x) > 0)) AS token
         |    FROM documents)
         |  GROUP BY token ORDER BY n DESC, token LIMIT 20
-        |) ORDER BY token""".stripMargin,
+        |) ORDER BY token""".stripMargin),
     // the unicode twin: exact top-20 of the RE2-replayed unicode
     // tokenizer over the mixed-script column, same constant-TRUE bounds
-    "sketch_cms_tokens_unicode" ->
+    Q("sketch_cms_tokens_unicode", sketchCmsTokensUnicode _,
       s"""SELECT token, n AS n_exact,
         |  TRUE AS no_underestimate, TRUE AS within_2eps
         |FROM (
@@ -499,48 +476,51 @@ object AnalyticsQueries extends QueryFamily {
         |            ${ExtensionQueries.mixedSqlExpr(full = false)} AS mtext
         |          FROM documents))
         |  GROUP BY token ORDER BY n DESC, token LIMIT 20
-        |) ORDER BY token""".stripMargin,
-    "agg_approx_distinct" ->
+        |) ORDER BY token""".stripMargin),
+    Q("agg_approx_distinct", aggApproxDistinct _,
+      benchTwin = Some(aggApproxDistinctBench _), oracle = Some(
       """SELECT o_orderstatus, COUNT(1) AS n_orders,
         |  COUNT(DISTINCT o_custkey) AS exact_customers,
         |  TRUE AS within_5pct
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_hll_sketch" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+    Q("agg_hll_sketch", aggHllSketch _,
+      benchTwin = Some(aggHllSketchBench _), oracle = Some(
       """SELECT o_orderstatus,
         |  COUNT(DISTINCT o_custkey) AS exact_customers,
         |  TRUE AS within_5pct
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_hll_union" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+    Q("agg_hll_union", aggHllUnion _,
+      benchTwin = Some(aggHllUnionBench _), oracle = Some(
       """SELECT CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS n_sketches,
         |  COUNT(DISTINCT o_custkey) AS exact_customers,
         |  TRUE AS within_5pct
-        |FROM orders""".stripMargin,
-    "agg_approx_quantiles" ->
+        |FROM orders""".stripMargin)),
+    Q("agg_approx_quantiles", aggApproxQuantiles _,
       """SELECT l_returnflag,
         |  QUANTILE_DISC(l_quantity, 0.25) AS q25,
         |  QUANTILE_DISC(l_quantity, 0.5) AS q50,
         |  QUANTILE_DISC(l_quantity, 0.75) AS q75,
         |  QUANTILE_DISC(l_quantity, 0.95) AS q95
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_topk_custom" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Q("agg_topk_custom", aggTopkCustom _,
       """SELECT o_custkey,
         |  (list_sort(list(o_totalprice), 'DESC'))[1] AS v1,
         |  (list_sort(list(o_totalprice), 'DESC'))[2] AS v2,
         |  (list_sort(list(o_totalprice), 'DESC'))[3] AS v3
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "agg_pivot" ->
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    Q("agg_pivot", aggPivot _,
       """SELECT o_custkey,
         |  COUNT(1) FILTER (o_orderstatus = 'F') AS n_f,
         |  COUNT(1) FILTER (o_orderstatus = 'O') AS n_o,
         |  COUNT(1) FILTER (o_orderstatus = 'P') AS n_p
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "agg_unpivot" ->
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+    Q("agg_unpivot", aggUnpivot _,
       """SELECT l_orderkey, l_linenumber, measure, rate FROM (
         |  SELECT l_orderkey, l_linenumber, 'l_discount' AS measure, l_discount AS rate FROM lineitem
         |  UNION ALL
         |  SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
-        |) ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-    "window_ntile" ->
+        |) ORDER BY l_orderkey, l_linenumber, measure""".stripMargin),
+    Q("window_ntile", windowNtile _,
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
         |  PERCENT_RANK() OVER w AS pct_rank,
@@ -551,8 +531,8 @@ object AnalyticsQueries extends QueryFamily {
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey),
         |  wf AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "window_rank" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Q("window_rank", windowRank _,
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    ROW_NUMBER() OVER w AS rn,
@@ -561,30 +541,30 @@ object AnalyticsQueries extends QueryFamily {
         |  FROM orders
         |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
         |) WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "window_lag_lead" ->
+        |ORDER BY o_custkey, rn""".stripMargin),
+    Q("window_lag_lead", windowLagLead _,
       """SELECT o_custkey, o_orderkey, o_orderdate,
         |  LAG(o_orderkey, 1) OVER w AS prev_order,
         |  LEAD(o_orderkey, 1) OVER w AS next_order,
         |  CAST(DATE_DIFF('day', LAG(o_orderdate, 1) OVER w, o_orderdate) AS INT) AS gap_days
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "window_running" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Q("window_running", windowRunning _,
       """SELECT o_custkey, o_orderkey, o_orderdate,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER
         |    (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "window_moving" ->
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Q("window_moving", windowMoving _,
       """SELECT o_custkey, o_orderkey,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER w AS DOUBLE) AS moving_sum,
         |  COUNT(1) OVER w AS frame_n
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "window_range_hour" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Q("window_range_hour", windowRangeHour _,
       """SELECT event_id, user_id,
         |  COUNT(1) OVER w AS n_1h,
         |  CAST(SUM(v_milli) OVER w AS BIGINT) AS sum_milli_1h
@@ -594,5 +574,5 @@ object AnalyticsQueries extends QueryFamily {
         |      FROM events) e
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch
         |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin)
+        |ORDER BY user_id, event_id""".stripMargin))
 }

@@ -1301,68 +1301,6 @@ object PipelineQueries extends QueryFamily {
       "mean_word_len" -> (lit(5) * nw <= col("n_chars"))))
   }
 
-  val queries: Map[String, QueryFn] = Map(
-    "sample_stratified" -> (sampleStratified _),
-    "mix_rebalance" -> (mixRebalance _),
-    "mix_temperature" -> (mixTemperature _),
-    "profile_documents" -> (profileDocuments _),
-    "text_collocations" -> (textCollocations _),
-    "decontaminate" -> (decontaminate _),
-    "decontaminate_unicode" -> (decontaminateUnicode _),
-    "decontaminate_bloom" -> (decontaminateBloom _),
-    "decontaminate_bloom_verdict" -> (decontaminateBloomVerdict _),
-    "quality_repetition" -> (qualityRepetition _),
-    "quality_rarity" -> (qualityRarity _),
-    "text_tfidf_top" -> (textTfidfTop _),
-    "quality_length_band" -> (qualityLengthBand _),
-    "source_stats" -> (sourceStats _),
-    "source_stats_increment" -> (sourceStatsIncrement _),
-    "hist_chars" -> (histChars _),
-    "corpus_drift" -> (corpusDrift _),
-    "stream_drift_monitor" -> (streamDriftMonitor _),
-    "source_overlap" -> (sourceOverlap _),
-    "text_normalize" -> (textNormalize _),
-    "corpus_dedup_lines" -> (corpusDedupLines _),
-    "corpus_remove_common_lines" -> (corpusRemoveCommonLines _),
-    "text_html_extract" -> (textHtmlExtract _),
-    "vocab_zipf" -> (vocabZipf _),
-    "corpus_token_hist" -> (corpusTokenHist _),
-    "bpe_merges" -> (bpeMerges _),
-    "bpe_token_count" -> (bpeTokenCount _),
-    "unigram_vocab" -> (unigramVocab _),
-    "unigram_token_count" -> (unigramTokenCount _),
-    "tokenizer_compare" -> (tokenizerCompare _),
-    "sample_topk_quality" -> (sampleTopkQuality _),
-    "sample_systematic" -> (sampleSystematic _),
-    "mix_schedule" -> (mixSchedule _),
-    "sample_source_cap" -> (sampleSourceCap _),
-    "sample_source_cap_salted" -> (sampleSourceCapSalted _),
-    "pipeline_corpus_v8" -> (pipelineCorpusV8 _),
-    "pipeline_corpus_v9" -> (pipelineCorpusV9 _),
-    "pipeline_corpus_v10" -> (pipelineCorpusV10 _),
-    "pipeline_corpus_v11" -> (pipelineCorpusV11 _),
-    "pipeline_corpus_v12" -> (pipelineCorpusV12 _),
-    "pipeline_corpus_v13" -> (pipelineCorpusV13 _),
-    "dedup_substring_pairs" -> (dedupSubstringPairs _),
-    "dedup_substring_verify" -> (dedupSubstringVerify _),
-    "dedup_span_removal" -> (dedupSpanRemoval _),
-    "dedup_span_removal_unicode" -> (dedupSpanRemovalUnicode _),
-    "pipeline_corpus_v7" -> (pipelineCorpusV7 _),
-    "boilerplate_ngrams" -> (boilerplateNgrams _),
-    "sample_group" -> (sampleGroup _),
-    "mix_token_budget" -> (mixTokenBudget _),
-    "mix_budget_epochs" -> (mixBudgetEpochs _),
-    "corpus_diff" -> (corpusDiff _),
-    "dedup_groups_cc" -> (dedupGroupsCc _),
-    "dedup_groups_cc_stars" -> (dedupGroupsCcStars _),
-    "dedup_cluster_stats" -> (dedupClusterStats _),
-    "dedup_pagerank" -> (dedupPagerank _),
-    "dedup_cc_increment" -> (dedupCcIncrement _),
-    "split_leakage_safe" -> (splitLeakageSafe _),
-    "pipeline_attrition" -> (pipelineAttrition _),
-    "quality_constraints" -> (qualityConstraints _),
-    "select_target_affinity" -> (selectTargetAffinity _))
-
   /** Re-inserts a `|` margin at the start of every continuation line of
     * an already-stripMargin'd fragment, so interpolating it into an
     * outer `s"""…""".stripMargin` string round-trips the fragment
@@ -1530,10 +1468,12 @@ object PipelineQueries extends QueryFamily {
   private val tokensSqlP =
     "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)"
 
-  val oracles: Map[String, String] = Map(
+  val declarations: Seq[Q] = Seq(
+    // no DuckDB oracle: checked by row count only
+    Q("decontaminate_bloom", decontaminateBloom _),
     // integer affinity and floor division keep the ranking exact; the
     // CASTs stop DuckDB's SUM from widening to HUGEINT (dtype gate)
-    "select_target_affinity" ->
+    Q("select_target_affinity", selectTargetAffinity _,
       s"""WITH tgt AS (
          |  SELECT unnest($tokensSqlP) AS tok FROM documents WHERE source = 'src0'),
          |tcnt AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS target_cnt FROM tgt GROUP BY tok),
@@ -1548,27 +1488,27 @@ object PipelineQueries extends QueryFamily {
          |  FROM tf LEFT JOIN tcnt tc USING (tok) GROUP BY tf.doc_id)
          |SELECT doc_id, n_tokens, affinity,
          |  CAST(affinity * 1000000 // n_tokens AS BIGINT) AS affinity_micro
-         |FROM sc ORDER BY affinity_micro DESC, doc_id LIMIT 100""".stripMargin,
-    "sample_stratified" ->
+         |FROM sc ORDER BY affinity_micro DESC, doc_id LIMIT 100""".stripMargin),
+    Q("sample_stratified", sampleStratified _,
       s"""SELECT doc_id, lang FROM documents
          |WHERE $bucketSql <
          |  CASE WHEN lang = 'en' THEN 500 WHEN lang = 'de' THEN 250 ELSE 100 END
-         |ORDER BY doc_id""".stripMargin,
-    "mix_rebalance" ->
+         |ORDER BY doc_id""".stripMargin),
+    Q("mix_rebalance", mixRebalance _,
       s"""WITH c AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
          |m AS (SELECT MIN(cnt) AS mn FROM c)
          |SELECT d.doc_id, d.lang FROM documents d JOIN c USING (lang), m
          |WHERE $bucketSql < FLOOR(1000.0 * m.mn / c.cnt)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // 1e6·mn/cnt is one IEEE multiply + divide and SQRT is a correctly-
     // rounded required op — bit-identical cross-engine (unlike POW)
-    "mix_temperature" ->
+    Q("mix_temperature", mixTemperature _,
       s"""WITH c AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
          |m AS (SELECT MIN(cnt) AS mn FROM c)
          |SELECT d.doc_id, d.lang FROM documents d JOIN c USING (lang), m
          |WHERE $bucketSql < FLOOR(SQRT(1000000.0 * m.mn / c.cnt))
-         |ORDER BY doc_id""".stripMargin,
-    "profile_documents" -> {
+         |ORDER BY doc_id""".stripMargin),
+    Q("profile_documents", profileDocuments _, {
       def one(c: String) =
         s"""SELECT '$c' AS column_name, COUNT(*) AS n_rows, COUNT($c) AS n_nonnull,
            |  COUNT(DISTINCT $c) AS n_distinct,
@@ -1576,8 +1516,8 @@ object PipelineQueries extends QueryFamily {
            |  CAST(MAX($c) AS VARCHAR) AS max_value FROM documents""".stripMargin
       Seq("doc_id", "text", "lang", "source", "n_chars").map(one)
         .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY column_name")
-    },
-    "text_collocations" ->
+    }),
+    Q("text_collocations", textCollocations _,
       s"""WITH ta AS (SELECT $tokensSqlP AS a FROM documents),
          |pairs AS (
          |  SELECT a[i] AS t1, a[i + 1] AS t2
@@ -1594,8 +1534,8 @@ object PipelineQueries extends QueryFamily {
          |  (CAST(ua.c AS DOUBLE) * CAST(ub.c AS DOUBLE)) AS lift
          |FROM big JOIN uni ua ON ua.tok = big.t1
          |JOIN uni ub ON ub.tok = big.t2 CROSS JOIN n
-         |ORDER BY lift DESC, t1, t2 LIMIT 50""".stripMargin,
-    "decontaminate" ->
+         |ORDER BY lift DESC, t1, t2 LIMIT 50""".stripMargin),
+    Q("decontaminate", decontaminate _,
       s"""WITH ${inMargin(toksCte)},
          |ng AS (
          |  SELECT doc_id,
@@ -1605,11 +1545,11 @@ object PipelineQueries extends QueryFamily {
          |SELECT c.doc_id, COUNT(DISTINCT c.ngram) AS n_hits
          |FROM ng c JOIN bench b ON c.ngram = b.ngram
          |WHERE c.doc_id % 97 <> 0
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin),
     // the unicode-contract decontamination replay: same CTE chain as
     // `decontaminate`, token stream swapped for the RE2 unicode
     // tokenizer over the mixed-script column
-    "decontaminate_unicode" ->
+    Q("decontaminate_unicode", decontaminateUnicode _,
       s"""WITH ${inMargin(toksUniCte)},
          |ng AS (
          |  SELECT doc_id,
@@ -1619,7 +1559,7 @@ object PipelineQueries extends QueryFamily {
          |SELECT c.doc_id, COUNT(DISTINCT c.ngram) AS n_hits
          |FROM ng c JOIN bench b ON c.ngram = b.ngram
          |WHERE c.doc_id % 97 <> 0
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin),
     // full SQL replay of 10 BPE merge rounds (the PageRank unrolled-CTE
     // pattern): words live as chr(1)-joined symbol strings; the greedy
     // left-to-right pair merge is exactly replace(s, l||sep||r, l||r)
@@ -1627,11 +1567,11 @@ object PipelineQueries extends QueryFamily {
     // both engines); ties break (count DESC, l, r) identically because
     // symbols are lowercase ASCII. Verified bit-equal vs trainMerges at
     // all three SFs before registration.
-    "bpe_merges" -> bpeMergesOracleSql,
+    Q("bpe_merges", bpeMerges _, bpeMergesOracleSql),
     // the exact-contamination side replayed verbatim (the green
     // `decontaminate` oracle), with the bloom no-false-negative gate
     // as the constant the Spark side must reproduce
-    "decontaminate_bloom_verdict" ->
+    Q("decontaminate_bloom_verdict", decontaminateBloomVerdict _,
       s"""WITH ${inMargin(toksCte)},
          |ng AS (
          |  SELECT doc_id,
@@ -1641,9 +1581,9 @@ object PipelineQueries extends QueryFamily {
          |SELECT DISTINCT c.doc_id, TRUE AS bloom_flagged
          |FROM ng c JOIN bench b ON c.ngram = b.ngram
          |WHERE c.doc_id % 97 <> 0
-         |ORDER BY c.doc_id""".stripMargin,
+         |ORDER BY c.doc_id""".stripMargin),
     // DuckDB SUM(BIGINT) returns HUGEINT — cast back for the typed hash
-    "quality_rarity" ->
+    Q("quality_rarity", qualityRarity _,
       s"""WITH ${inMargin(toksCte)},
          |tf AS (SELECT doc_id, tok AS term, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
          |freq AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS freq FROM tf GROUP BY term)
@@ -1652,8 +1592,8 @@ object PipelineQueries extends QueryFamily {
          |  CAST(SUM(t.tf * f.freq) AS BIGINT) AS sum_tok_freq,
          |  CAST(MIN(f.freq) AS BIGINT) AS min_tok_freq
          |FROM tf t JOIN freq f USING (term)
-         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    "quality_repetition" ->
+         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin),
+    Q("quality_repetition", qualityRepetition _,
       s"""WITH ${inMargin(toksCte)},
          |ng AS (
          |  SELECT doc_id, tok || ' ' || LEAD(tok, 1) OVER w AS ngram
@@ -1661,8 +1601,8 @@ object PipelineQueries extends QueryFamily {
          |cnt AS (SELECT doc_id, ngram, COUNT(*) AS c
          |        FROM ng WHERE ngram IS NOT NULL GROUP BY doc_id, ngram)
          |SELECT doc_id, MAX(c) AS top_cnt, CAST(SUM(c) AS BIGINT) AS n_bigrams
-         |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_tfidf_top" ->
+         |FROM cnt GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Q("text_tfidf_top", textTfidfTop _,
       s"""WITH ${inMargin(toksCte)},
          |tf AS (SELECT doc_id, tok AS term, COUNT(*) AS tf FROM toks GROUP BY doc_id, tok),
          |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -1672,8 +1612,8 @@ object PipelineQueries extends QueryFamily {
          |      ORDER BY (t.tf * 1000000) // d.df DESC, t.term) AS rnk
          |  FROM tf t JOIN df d USING (term))
          |SELECT doc_id, rnk, term, CAST(score AS BIGINT) AS score
-         |FROM scored WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    "quality_length_band" ->
+         |FROM scored WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
+    Q("quality_length_band", qualityLengthBand _,
       """WITH h AS (
         |  SELECT n_chars, COUNT(*) AS cnt FROM documents GROUP BY n_chars),
         |c AS (
@@ -1686,23 +1626,23 @@ object PipelineQueries extends QueryFamily {
         |  SELECT n_chars FROM c
         |  WHERE 20 * cum >= total AND 20 * (cum - cnt) <= 19 * total)
         |SELECT d.doc_id, d.n_chars FROM documents d JOIN keep USING (n_chars)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
     // DuckDB SUM(BIGINT) → HUGEINT: cast back for the typed hash
-    "source_stats" ->
+    Q("source_stats", sourceStats _,
       """SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
         |  CAST(SUM(n_chars * n_chars) AS BIGINT) AS sum_chars_sq,
         |  MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
     // the merged increment must equal a FULL recompute — that equality
     // is the whole point, so the oracle is the full-table aggregation
-    "source_stats_increment" ->
+    Q("source_stats_increment", sourceStatsIncrement _,
       """SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
         |  CAST(SUM(n_chars * n_chars) AS BIGINT) AS sum_chars_sq,
         |  MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "hist_chars" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Q("hist_chars", histChars _,
       """WITH h AS (SELECT n_chars AS v, COUNT(1) AS cnt FROM documents GROUP BY n_chars),
         |c AS (SELECT v, cnt,
         |    SUM(cnt) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -1711,28 +1651,28 @@ object PipelineQueries extends QueryFamily {
         |i AS (SELECT CAST(unnest(generate_series(1, 7)) AS INTEGER) AS bucket)
         |SELECT bucket, v AS boundary FROM c, i
         |WHERE 8 * cum >= bucket * total AND 8 * (cum - cnt) < bucket * total
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin),
     // replays histogramDrift: reference-snapshot equi-depth boundaries,
     // bin = 1 + count(boundaries < v) (the operator's indicator sum),
     // fixed-point TV with floor division at every step
-    "corpus_drift" ->
+    Q("corpus_drift", corpusDrift _,
       s"""WITH ${inMargin(driftCtes)}
         |SELECT bin, n_old, n_new, p_old_ppm, p_new_ppm,
         |  CAST(delta_ppm AS BIGINT) AS delta_ppm,
         |  CAST(sd // 2 AS BIGINT) AS tv_ppm,
         |  (sd // 2) > 50000 AS drifted
-        |FROM d CROSS JOIN s2 ORDER BY bin""".stripMargin,
+        |FROM d CROSS JOIN s2 ORDER BY bin""".stripMargin),
     // the streaming monitor's landed per-batch summary: the bounded
     // fixture is ONE micro-batch (batch_id 0), so the summary folds the
     // identical bin derivation to (row count, tv, verdict)
-    "stream_drift_monitor" ->
+    Q("stream_drift_monitor", streamDriftMonitor _,
       s"""WITH ${inMargin(driftCtes)}
         |SELECT CAST(0 AS BIGINT) AS batch_id,
         |  CAST((SELECT SUM(n_new) FROM d) AS BIGINT) AS n_rows,
         |  CAST(sd // 2 AS BIGINT) AS tv_ppm,
         |  (sd // 2) > 50000 AS drifted
-        |FROM s2""".stripMargin,
-    "source_overlap" ->
+        |FROM s2""".stripMargin),
+    Q("source_overlap", sourceOverlap _,
       s"""WITH stoks AS (
          |  SELECT doc_id, source,
          |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)) AS tok,
@@ -1746,14 +1686,14 @@ object PipelineQueries extends QueryFamily {
          |ng AS (SELECT DISTINCT source, ngram FROM ngr WHERE ngram IS NOT NULL)
          |SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS shared_ngrams
          |FROM ng a JOIN ng b ON a.ngram = b.ngram AND a.source < b.source
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_normalize" ->
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Q("text_normalize", textNormalize _,
       """SELECT doc_id,
         |  MD5(TRIM(REGEXP_REPLACE(LOWER(text), '[^a-z0-9]+', ' ', 'g'))) AS norm_digest
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // keep-first line dedup replayed relationally: first occurrence of
     // each line by position, re-joined in first-seen order
-    "corpus_dedup_lines" ->
+    Q("corpus_dedup_lines", corpusDedupLines _,
       """WITH d AS (
         |  SELECT doc_id,
         |    string_split(replace(text, ' ', chr(10)), chr(10)) AS ls
@@ -1775,11 +1715,11 @@ object PipelineQueries extends QueryFamily {
         |  CAST(t.n_lines AS BIGINT) AS n_lines,
         |  CAST(t.n_lines - a.n_kept AS BIGINT) AS n_removed
         |FROM tot t JOIN agg a ON t.doc_id = a.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
+        |ORDER BY t.doc_id""".stripMargin),
     // fraction-thresholded common-line removal, integer cross-multiplied
     // (1000·nd >= permille·n_docs) — no float ratio on either side;
     // fully-emptied docs must survive as rows with empty clean text
-    "corpus_remove_common_lines" ->
+    Q("corpus_remove_common_lines", corpusRemoveCommonLines _,
       """WITH d AS (
         |  SELECT doc_id,
         |    string_split(replace(text, ' ', chr(10)), chr(10)) AS ls
@@ -1805,11 +1745,11 @@ object PipelineQueries extends QueryFamily {
         |  CAST(t.n_lines AS BIGINT) AS n_lines,
         |  CAST(t.n_lines - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed
         |FROM tot t LEFT JOIN agg a ON t.doc_id = a.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
+        |ORDER BY t.doc_id""".stripMargin),
     // the SAME page construction and the SAME regex chain (Java∩RE2
     // subset; DuckDB's RE2 reads the identical patterns) — the oracle
     // twins the operator, not a precomputed answer
-    "text_html_extract" ->
+    Q("text_html_extract", textHtmlExtract _,
       """WITH page AS (
         |  SELECT doc_id,
         |    '<html><head><title>d</title>'
@@ -1839,14 +1779,14 @@ object PipelineQueries extends QueryFamily {
         |  FROM page)
         |SELECT doc_id, MD5(extracted) AS extract_digest,
         |  CAST(LENGTH(extracted) AS BIGINT) AS n_chars
-        |FROM x ORDER BY doc_id""".stripMargin,
+        |FROM x ORDER BY doc_id""".stripMargin),
     // bounded-check: BPE merges never cross word boundaries and every
     // word is >= 1 token, so n_words <= n_bpe <= n_chars; DuckDB
     // recomputes both bounds, the verdict is constant TRUE
     // bounded-check oracle for the unigram trainer: the coverage floor
     // is exactly the corpus character set (DuckDB-exact); the budget and
     // well-formedness gates are Spark-computed constants
-    "unigram_vocab" ->
+    Q("unigram_vocab", unigramVocab _,
       """WITH toks AS (
         |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> len(x) > 0)) AS tok FROM documents),
@@ -1855,10 +1795,10 @@ object PipelineQueries extends QueryFamily {
         |  CAST((SELECT COUNT(*) FROM ch) AS BIGINT) AS value, TRUE AS ok
         |UNION ALL SELECT 'max_vocab', 64, TRUE
         |UNION ALL SELECT 'model_wellformed', 0, TRUE
-        |ORDER BY metric""".stripMargin,
+        |ORDER BY metric""".stripMargin),
     // both tokenizers' per-source bounds + the 64-piece-unigram-beats-
     // 10-merge-BPE compression gate, all checked with margin at 3 SFs
-    "tokenizer_compare" ->
+    Q("tokenizer_compare", tokenizerCompare _,
       """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(LEN(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> len(x) > 0))) AS BIGINT) AS n_words,
@@ -1867,8 +1807,8 @@ object PipelineQueries extends QueryFamily {
         |      x -> len(x) > 0), x -> LEN(x))), 0)) AS BIGINT) AS n_chars,
         |  TRUE AS bpe_in_bounds, TRUE AS unigram_in_bounds,
         |  TRUE AS unigram_leq_bpe
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "unigram_token_count" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Q("unigram_token_count", unigramTokenCount _,
       """SELECT doc_id,
         |  CAST(LEN(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> len(x) > 0)) AS BIGINT) AS n_words,
@@ -1876,8 +1816,8 @@ object PipelineQueries extends QueryFamily {
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |      x -> len(x) > 0), x -> LEN(x))), 0) AS BIGINT) AS n_chars,
         |  TRUE AS unigram_in_bounds
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "bpe_token_count" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("bpe_token_count", bpeTokenCount _,
       """SELECT doc_id,
         |  CAST(LEN(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> len(x) > 0)) AS BIGINT) AS n_words,
@@ -1885,24 +1825,24 @@ object PipelineQueries extends QueryFamily {
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |      x -> len(x) > 0), x -> LEN(x))), 0) AS BIGINT) AS n_chars,
         |  TRUE AS bpe_in_bounds
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "corpus_token_hist" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("corpus_token_hist", corpusTokenHist _,
       """WITH t AS (
         |  SELECT CAST(LEN(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> len(x) > 0)) AS BIGINT) AS nt
         |  FROM documents)
         |SELECT nt // 16 AS bucket, COUNT(*) AS n_docs,
         |  MIN(nt) AS min_tokens, MAX(nt) AS max_tokens
-        |FROM t GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "vocab_zipf" ->
+        |FROM t GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Q("vocab_zipf", vocabZipf _,
       """WITH tf AS (
         |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)) AS tok
         |  FROM documents),
         |c AS (SELECT tok, COUNT(*) AS cnt FROM tf GROUP BY tok)
         |SELECT CAST(LENGTH(BIN(cnt)) AS BIGINT) AS bucket,
         |  COUNT(*) AS n_terms, CAST(SUM(cnt) AS BIGINT) AS occurrences
-        |FROM c GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "dedup_substring_pairs" ->
+        |FROM c GROUP BY bucket ORDER BY bucket""".stripMargin),
+    Q("dedup_substring_pairs", dedupSubstringPairs _,
       s"""WITH ${inMargin(toksCte)},
          |ng AS (
          |  SELECT doc_id,
@@ -1917,8 +1857,8 @@ object PipelineQueries extends QueryFamily {
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |  COUNT(DISTINCT a.ngram) AS n_shared
          |FROM dg a JOIN dg b ON a.ngram = b.ngram AND a.doc_id < b.doc_id
-         |GROUP BY a.doc_id, b.doc_id ORDER BY id_a, id_b""".stripMargin,
-    "dedup_substring_verify" ->
+         |GROUP BY a.doc_id, b.doc_id ORDER BY id_a, id_b""".stripMargin),
+    Q("dedup_substring_verify", dedupSubstringVerify _,
       s"""WITH ${inMargin(toksCte)},
          |ng AS (
          |  SELECT doc_id, pos,
@@ -1945,18 +1885,18 @@ object PipelineQueries extends QueryFamily {
          |SELECT id_a, id_b, CAST(MAX(run) + 3 AS BIGINT) AS max_run_tokens
          |FROM runs GROUP BY id_a, id_b
          |HAVING MAX(run) + 3 >= 5
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
     // the full rewrite replayed: dup-gram stats (keep-first by
     // (doc_id, pos)), interval merge, position coverage, token rebuild
-    "dedup_span_removal" ->
+    Q("dedup_span_removal", dedupSpanRemoval _,
       s"""WITH ${inMargin(toksCte)},
          |${inMargin(spanRemovalCtes)}
          |SELECT doc_id, text_clean, n_tokens, n_removed
-         |FROM spanout ORDER BY doc_id""".stripMargin,
+         |FROM spanout ORDER BY doc_id""".stripMargin),
     // v11: unicode span removal -> content gate -> min-id dedup ->
     // (durable store lifecycle runs Spark-side; the gates are constants)
     // -> minus the % 13 takedown set -> bucket digest chain
-    "pipeline_corpus_v11" ->
+    Q("pipeline_corpus_v11", pipelineCorpusV11 _,
       s"""WITH ${inMargin(toksUniCte)},
          |${inMargin(spanRemovalCtes)},
          |gated AS (SELECT doc_id, MD5(text_clean) AS ld FROM spanout
@@ -1967,11 +1907,11 @@ object PipelineQueries extends QueryFamily {
          |SELECT doc_id % 8 AS bucket, CAST(COUNT(1) AS BIGINT) AS n_docs,
          |  MD5(STRING_AGG(ld, '' ORDER BY doc_id)) AS digest,
          |  TRUE AS store_ok, TRUE AS forget_ok
-         |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin),
     // v12: the same front as v11 but the store is PARQUET and keyed by
     // the content DIGEST (bloom-pruned takedown, %17-of-the-even-half
     // set); CDC/retention/pushed-lookup gates are constants
-    "pipeline_corpus_v12" ->
+    Q("pipeline_corpus_v12", pipelineCorpusV12 _,
       s"""WITH ${inMargin(toksUniCte)},
          |${inMargin(spanRemovalCtes)},
          |gated AS (SELECT doc_id, MD5(text_clean) AS ld FROM spanout
@@ -1984,14 +1924,14 @@ object PipelineQueries extends QueryFamily {
          |  MD5(STRING_AGG(ld, '' ORDER BY doc_id)) AS digest,
          |  TRUE AS store_ok, TRUE AS forget_ok,
          |  TRUE AS cdc_ok, TRUE AS pushed_ok
-         |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin),
     // v13: the same front as v12; the store carries multi-column
     // sidecars and the takedown is MERGE-ON-READ with one digest
     // re-added at +10⁷ — final table = survivors minus the %17 set
     // plus the lowest deleted digest's re-add; every lifecycle gate
     // (no-rewrite, windows, streamed replay, SQL screen, retention)
     // is a constant
-    "pipeline_corpus_v13" ->
+    Q("pipeline_corpus_v13", pipelineCorpusV13 _,
       s"""WITH ${inMargin(toksUniCte)},
          |${inMargin(spanRemovalCtes)},
          |gated AS (SELECT doc_id, MD5(text_clean) AS ld FROM spanout
@@ -2006,17 +1946,17 @@ object PipelineQueries extends QueryFamily {
          |  MD5(STRING_AGG(ld, '' ORDER BY doc_id)) AS digest,
          |  TRUE AS store_ok, TRUE AS window_ok, TRUE AS stream_ok,
          |  TRUE AS sql_ok, TRUE AS forget_ok
-         |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin),
     // the unicode-contract span-removal replay: the SAME rewrite CTE
     // chain over the unicode token stream of the mixed column
-    "dedup_span_removal_unicode" ->
+    Q("dedup_span_removal_unicode", dedupSpanRemovalUnicode _,
       s"""WITH ${inMargin(toksUniCte)},
          |${inMargin(spanRemovalCtes)}
          |SELECT doc_id, text_clean, n_tokens, n_removed
-         |FROM spanout ORDER BY doc_id""".stripMargin,
+         |FROM spanout ORDER BY doc_id""".stripMargin),
     // v7: span removal -> kept-token gate -> min-id exact dedup of the
     // cleaned text -> per-source rollup with id-ordered digest chain
-    "pipeline_corpus_v7" ->
+    Q("pipeline_corpus_v7", pipelineCorpusV7 _,
       s"""WITH ${inMargin(toksCte)},
          |${inMargin(spanRemovalCtes)},
          |gated AS (SELECT doc_id, MD5(text_clean) AS dg, n_tokens, n_removed
@@ -2028,8 +1968,8 @@ object PipelineQueries extends QueryFamily {
          |  CAST(SUM(s.n_removed) AS BIGINT) AS removed_tokens,
          |  MD5(STRING_AGG(s.dg, '' ORDER BY s.doc_id)) AS digest_chain
          |FROM sur s JOIN documents d ON d.doc_id = s.doc_id
-         |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "boilerplate_ngrams" ->
+         |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    Q("boilerplate_ngrams", boilerplateNgrams _,
       """WITH toks AS (
         |  SELECT doc_id, lang,
         |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)) AS tok,
@@ -2044,10 +1984,10 @@ object PipelineQueries extends QueryFamily {
         |SELECT g.lang, g.ngram, g.n_docs
         |FROM gs g JOIN tot t USING (lang)
         |WHERE g.n_docs * 10 >= t.total AND g.n_docs >= 3
-        |ORDER BY g.lang, g.ngram""".stripMargin,
+        |ORDER BY g.lang, g.ngram""".stripMargin),
     // the salted draw replayed: LCG slice assignment, per-(group, slice)
     // md5 rank, exact integer quota split across 8 slices
-    "sample_source_cap_salted" ->
+    Q("sample_source_cap_salted", sampleSourceCapSalted _,
       ("""WITH g AS (
         |  SELECT doc_id,
         |    CASE WHEN source IN ('src1','src2','src3','src4',
@@ -2063,10 +2003,10 @@ object PipelineQueries extends QueryFamily {
         |      FROM g)
         |SELECT r.src_grp, r.doc_id FROM r, c
         |WHERE r.rk <= c.cap // 8 + CASE WHEN r.sl < c.cap % 8 THEN 1 ELSE 0 END
-        |ORDER BY r.src_grp, r.doc_id""").stripMargin,
+        |ORDER BY r.src_grp, r.doc_id""").stripMargin),
     // v8: dominance cap -> deterministic interleave -> schedule-order
     // digest per source; the stage CTE families composed end to end
-    "pipeline_corpus_v8" ->
+    Q("pipeline_corpus_v8", pipelineCorpusV8 _,
       """WITH g AS (
         |  SELECT doc_id, n_chars,
         |    CASE WHEN source IN ('src1','src2','src3','src4',
@@ -2090,7 +2030,7 @@ object PipelineQueries extends QueryFamily {
         |SELECT src_grp, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  MD5(STRING_AGG(CAST(doc_id AS VARCHAR), ',' ORDER BY skey, doc_id))
         |    AS sched_digest
-        |FROM keyed GROUP BY src_grp ORDER BY src_grp""".stripMargin,
+        |FROM keyed GROUP BY src_grp ORDER BY src_grp""".stripMargin),
     // the round-15 recipe replayed end-to-end: multilingual column →
     // unicode token-sequence fingerprint dedup (min-id survivor) →
     // never-ingested corpus (takedown ids excluded at derivation — the
@@ -2099,7 +2039,7 @@ object PipelineQueries extends QueryFamily {
     // with its proven owner (mixedSqlExpr/tokensUniSql from the unicode
     // rows, bm25ScoredCtes/rank CTEs/fuse tail from the retrieval
     // family) so no copy can drift
-    "pipeline_corpus_v10" ->
+    Q("pipeline_corpus_v10", pipelineCorpusV10 _,
       s"""WITH mx AS (
          |  SELECT doc_id, ${ExtensionQueries.mixedSqlExpr(full = false)} AS mtext FROM documents),
          |fpt AS (SELECT doc_id,
@@ -2113,12 +2053,12 @@ object PipelineQueries extends QueryFamily {
          |${inMargin(RetrievalQueries.sparseRankCte())},
          |${inMargin(RetrievalQueries.denseRankCte(
               " AND ec.vec_id IN (SELECT doc_id FROM corpus)"))},
-         |${inMargin(RetrievalQueries.hybridFuseTail(", TRUE AS forget_equal"))}""".stripMargin,
+         |${inMargin(RetrievalQueries.hybridFuseTail(", TRUE AS forget_equal"))}""".stripMargin),
     // the full pretrain recipe replayed: cap → fingerprint screen (md5
     // identity stands in for the band-key collision — exact by
     // construction) → gopher gates → 3-gram decontamination → component
     // split → schedule keys → waterfall + schedule-order digests
-    "pipeline_corpus_v9" ->
+    Q("pipeline_corpus_v9", pipelineCorpusV9 _,
       s"""WITH ${inMargin(toksCte)},
          |g AS (
          |  SELECT doc_id, n_chars, lang, source, text,
@@ -2195,10 +2135,10 @@ object PipelineQueries extends QueryFamily {
          |FROM c1 LEFT JOIN c2 USING (src_grp) LEFT JOIN c3 USING (src_grp)
          |LEFT JOIN c4 USING (src_grp) LEFT JOIN c5 USING (src_grp)
          |LEFT JOIN dg USING (src_grp)
-         |ORDER BY src_grp""".stripMargin,
+         |ORDER BY src_grp""".stripMargin),
     // the Bresenham interleave replayed: per-source rank × exact
     // integer slot-midpoint key, one global order
-    "mix_schedule" ->
+    Q("mix_schedule", mixSchedule _,
       """WITH r AS (
         |  SELECT source, doc_id,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS k,
@@ -2206,10 +2146,10 @@ object PipelineQueries extends QueryFamily {
         |  FROM documents)
         |SELECT source, doc_id, CAST(k AS INTEGER) AS src_seq,
         |  CAST(((2 * k - 1) * 1000000000000) // sw AS BIGINT) AS sched_key
-        |FROM r ORDER BY sched_key, source, doc_id""".stripMargin,
+        |FROM r ORDER BY sched_key, source, doc_id""".stripMargin),
     // the cap draw replayed: skewed regrouping, per-group md5-ordered
     // rank, integer floor cap off the grand total
-    "sample_source_cap" ->
+    Q("sample_source_cap", sampleSourceCap _,
       """WITH g AS (
         |  SELECT doc_id,
         |    CASE WHEN source IN ('src1','src2','src3','src4',
@@ -2223,10 +2163,10 @@ object PipelineQueries extends QueryFamily {
         |      FROM g)
         |SELECT r.src_grp, r.doc_id FROM r, t
         |WHERE r.rk <= (t.total * 200) // 1000
-        |ORDER BY r.src_grp, r.doc_id""".stripMargin,
+        |ORDER BY r.src_grp, r.doc_id""".stripMargin),
     // systematic PPS replayed: global cumsum in doc order, midpoint
     // selection points, per-doc pick multiplicity (2k = 200)
-    "sample_systematic" ->
+    Q("sample_systematic", sampleSystematic _,
       """WITH c AS (
         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
         |    SUM(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum,
@@ -2237,35 +2177,35 @@ object PipelineQueries extends QueryFamily {
         |          - ((200 * (cum - w) + tw - 1) // (2 * tw)) AS BIGINT) AS n_picks
         |      FROM c)
         |SELECT doc_id, w AS weight, n_picks FROM p
-        |WHERE n_picks >= 1 ORDER BY doc_id""".stripMargin,
-    "sample_topk_quality" ->
+        |WHERE n_picks >= 1 ORDER BY doc_id""".stripMargin),
+    Q("sample_topk_quality", sampleTopkQuality _,
       """SELECT source, rnk, doc_id, n_chars FROM (
         |  SELECT source, doc_id, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY source
         |      ORDER BY n_chars DESC, doc_id ASC) AS rnk
         |  FROM documents)
-        |WHERE rnk <= 5 ORDER BY source, rnk""".stripMargin,
+        |WHERE rnk <= 5 ORDER BY source, rnk""".stripMargin),
     // closure of the chain edges = the (lang, source) group, so the
     // oracle states the POST-closure truth the iteration must reach
-    "sample_group" ->
+    Q("sample_group", sampleGroup _,
       """SELECT source, doc_id FROM (
         |  SELECT source, doc_id,
         |    ROW_NUMBER() OVER (PARTITION BY source
         |      ORDER BY MD5('42#' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
         |  FROM documents)
-        |WHERE rn <= 5 ORDER BY source, doc_id""".stripMargin,
-    "mix_token_budget" ->
+        |WHERE rn <= 5 ORDER BY source, doc_id""".stripMargin),
+    Q("mix_token_budget", mixTokenBudget _,
       """SELECT source, doc_id, n_chars, cum_cost FROM (
         |  SELECT source, doc_id, n_chars,
         |    CAST(SUM(n_chars) OVER (PARTITION BY source
         |      ORDER BY n_chars DESC, doc_id
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cost
         |  FROM documents)
-        |WHERE cum_cost <= 2000 ORDER BY source, doc_id""".stripMargin,
+        |WHERE cum_cost <= 2000 ORDER BY source, doc_id""".stripMargin),
     // replays Sampling.budgetEpochs' two floor-division rounds exactly;
     // weights (i+1 for src_i) and the 2× budget / 2-epoch cap mirror the
     // Spark wiring above
-    "mix_budget_epochs" -> {
+    Q("mix_budget_epochs", mixBudgetEpochs _, {
       val weightValues = (0 until 20)
         .map(i => s"('src$i', ${i + 1})").mkString(", ")
       s"""WITH lens AS (SELECT source,
@@ -2293,8 +2233,8 @@ object PipelineQueries extends QueryFamily {
          |  CAST((1000000 * alloc_tokens) // tokens AS BIGINT) AS epochs_ppm,
          |  alloc_tokens = cap AS capped
          |FROM fin ORDER BY source""".stripMargin
-    },
-    "corpus_diff" ->
+    }),
+    Q("corpus_diff", corpusDiff _,
       """WITH v1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 11 != 3),
         |v2 AS (SELECT doc_id,
         |         CASE WHEN doc_id % 13 = 0 THEN text || ' v2' ELSE text END AS text
@@ -2304,16 +2244,16 @@ object PipelineQueries extends QueryFamily {
         |             WHEN n.doc_id IS NULL THEN 'removed'
         |             WHEN o.text IS DISTINCT FROM n.text THEN 'changed' END AS status
         |      FROM v1 o FULL OUTER JOIN v2 n ON o.doc_id = n.doc_id)
-        |SELECT doc_id, status FROM d WHERE status IS NOT NULL ORDER BY doc_id""".stripMargin,
-    "dedup_groups_cc" ->
+        |SELECT doc_id, status FROM d WHERE status IS NOT NULL ORDER BY doc_id""".stripMargin),
+    Q("dedup_groups_cc", dedupGroupsCc _,
       """SELECT doc_id, MIN(doc_id) OVER (PARTITION BY lang, source) AS component
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "dedup_groups_cc_stars" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("dedup_groups_cc_stars", dedupGroupsCcStars _,
       """SELECT doc_id, MIN(doc_id) OVER (PARTITION BY lang, source) AS component
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // chain fixture closure: a (lang, source) group of n docs has n-1
     // chain edges, so the stats reduce to group counts
-    "dedup_cluster_stats" ->
+    Q("dedup_cluster_stats", dedupClusterStats _,
       """WITH g AS (
         |  SELECT MIN(doc_id) AS component, COUNT(*) AS n_nodes
         |  FROM documents GROUP BY lang, source)
@@ -2323,10 +2263,10 @@ object PipelineQueries extends QueryFamily {
         |    (2.0 * CAST(n_nodes - 1 AS DOUBLE)) /
         |    (CAST(n_nodes AS DOUBLE) * CAST(n_nodes - 1 AS DOUBLE))
         |  ELSE NULL END AS density
-        |FROM g ORDER BY component""".stripMargin,
+        |FROM g ORDER BY component""".stripMargin),
     // the operator's integer power iteration, unrolled round by round
     // (`//` = DuckDB floor division = Spark's DIV on positive longs)
-    "dedup_pagerank" -> {
+    Q("dedup_pagerank", dedupPagerank _, {
       val base =
         """WITH chain AS (
           |  SELECT prev AS src, doc_id AS dst FROM (
@@ -2344,24 +2284,24 @@ object PipelineQueries extends QueryFamily {
       }
       (base +: rounds).mkString(",\n") +
         "\nSELECT id AS doc_id, CAST(pr AS BIGINT) AS pr_ppb FROM pr5 ORDER BY doc_id"
-    },
-    "dedup_cc_increment" ->
+    }),
+    Q("dedup_cc_increment", dedupCcIncrement _,
       """SELECT doc_id, MIN(doc_id) OVER (PARTITION BY lang, source) AS component
         |FROM (SELECT doc_id, lang, source,
         |        COUNT(*) OVER (PARTITION BY lang, source) AS n
         |      FROM documents)
         |WHERE NOT (n = 1 AND doc_id % 2 = 1)
-        |ORDER BY doc_id""".stripMargin,
-    "split_leakage_safe" ->
+        |ORDER BY doc_id""".stripMargin),
+    Q("split_leakage_safe", splitLeakageSafe _,
       """SELECT doc_id, component,
         |  CASE WHEN SUBSTR(MD5(CAST(component AS VARCHAR)), 1, 1) IN ('0', '1')
         |    THEN 'val' ELSE 'train' END AS split
         |FROM (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY lang, source) AS component
         |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // COALESCE(pred, FALSE) mirrors the operator's NULL-means-violation
     // rule (no NULLs in the fixture, but the SQL stays in lockstep)
-    "quality_constraints" ->
+    Q("quality_constraints", qualityConstraints _,
       """WITH a AS (SELECT COUNT(*) AS total,
         |  SUM(CASE WHEN NOT COALESCE(n_chars = LENGTH(text), FALSE) THEN 1 ELSE 0 END) AS v0,
         |  SUM(CASE WHEN NOT COALESCE(lang IN ('en','de','fr','es','zh'), FALSE) THEN 1 ELSE 0 END) AS v1,
@@ -2377,8 +2317,8 @@ object PipelineQueries extends QueryFamily {
         |  UNION ALL SELECT 'min_chars_100', v2 FROM a
         |  UNION ALL SELECT 'unique:doc_id', total - u0 FROM a
         |  UNION ALL SELECT 'unique:source', total - u1 FROM a)
-        |ORDER BY constraint_name""".stripMargin,
-    "pipeline_attrition" ->
+        |ORDER BY constraint_name""".stripMargin),
+    Q("pipeline_attrition", pipelineAttrition _,
       s"""WITH t AS (SELECT n_chars,
          |    CAST(LEN($tokensSqlP) AS BIGINT) AS nw
          |  FROM documents),
@@ -2401,5 +2341,5 @@ object PipelineQueries extends QueryFamily {
          |  CAST((SELECT total FROM tot)
          |    - SUM(n_rejected) OVER (ORDER BY stage_no
          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n_out
-         |FROM j ORDER BY stage_no""".stripMargin)
+         |FROM j ORDER BY stage_no""".stripMargin))
 }

@@ -4,12 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Shared helpers + the (queries, oracles) contract each family exports. */
-trait QueryFamily {
-  type QueryFn = (SparkSession, String) => DataFrame
+/** One registered query, declared once: its name, the plan Verify dumps,
+  * its DuckDB oracle when the semantics are ANSI-SQL expressible (None =
+  * checked by row count only), and an optional twin that Bench times
+  * under the same name instead of `fn`. */
+final case class Q(
+    name: String,
+    fn: Q.Fn,
+    oracle: Option[String] = None,
+    benchTwin: Option[Q.Fn] = None)
 
-  def queries: Map[String, QueryFn]
-  def oracles: Map[String, String]
+object Q {
+  type Fn = (SparkSession, String) => DataFrame
+
+  /** The common case: a query with its oracle and no bench twin. */
+  def apply(name: String, fn: Fn, oracle: String): Q = Q(name, fn, Some(oracle))
+}
+
+/** Shared helpers + the one contract each family exports: its
+  * `declarations`, one [[Q]] per query. */
+trait QueryFamily {
+  def declarations: Seq[Q]
 
   /** Exact-decimal bridge for double columns: both engines compute the
     * aggregation in DECIMAL(12,2)-derived types (exact), exporting DOUBLE

@@ -216,44 +216,25 @@ object RelationalQueries extends QueryFamily {
     actives(1996).except(actives(2000)).orderBy(col("o_custkey"))
   }
 
-  val queries: Map[String, QueryFn] = Map(
-    "s2_projection" -> (s2Projection _),
-    "f1_inlist" -> (f1Inlist _),
-    "f2_timerange" -> (f2Timerange _),
-    "o1_sort_global" -> (o1SortGlobal _),
-    "q3_join_topk" -> (q3JoinTopk _),
-    "q5_multijoin" -> (q5MultiJoin _),
-    "join_semi" -> (joinSemi _),
-    "join_anti" -> (joinAnti _),
-    "join_outer_agg" -> (joinOuterAgg _),
-    "topk_limit" -> (topkLimit _),
-    "limit_offset" -> (limitOffset _),
-    "set_union_all" -> (setUnionAll _),
-    "set_intersect" -> (setIntersect _),
-    "set_except" -> (setExcept _),
-    "sub_scalar_count" -> (subScalarCount _),
-    "sub_not_in" -> (subNotIn _),
-    "sub_nested" -> (subNested _))
-
-  val oracles: Map[String, String] = Map(
-    "s2_projection" ->
+  val declarations: Seq[Q] = Seq(
+    Q("s2_projection", s2Projection _,
       """SELECT o_orderkey AS okey, o_custkey AS ckey, o_orderdate AS odate
-        |FROM orders ORDER BY okey""".stripMargin,
-    "f1_inlist" ->
+        |FROM orders ORDER BY okey""".stripMargin),
+    Q("f1_inlist", f1Inlist _,
       """SELECT o_orderkey, o_custkey, o_orderstatus
         |FROM orders
         |WHERE o_orderstatus IN ('F', 'P') AND o_custkey IN (1, 7, 21, 42, 99)
-        |ORDER BY o_orderkey""".stripMargin,
-    "f2_timerange" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Q("f2_timerange", f2Timerange _,
       """SELECT l_orderkey, l_linenumber, l_shipdate
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_shipdate <= TIMESTAMP '1997-12-31 23:59:59'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "o1_sort_global" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Q("o1_sort_global", o1SortGlobal _,
       """SELECT o_custkey, o_orderdate, o_orderkey, o_totalprice
-        |FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin,
-    "q3_join_topk" ->
+        |FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin),
+    Q("q3_join_topk", q3JoinTopk _,
       """SELECT l_orderkey, o_orderdate,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -264,8 +245,8 @@ object RelationalQueries extends QueryFamily {
         |  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
         |GROUP BY l_orderkey, o_orderdate
         |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q5_multijoin" ->
+        |LIMIT 10""".stripMargin),
+    Q("q5_multijoin", q5MultiJoin _,
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -278,64 +259,64 @@ object RelationalQueries extends QueryFamily {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "join_semi" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    Q("join_semi", joinSemi _,
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_anti" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Q("join_anti", joinAnti _,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_outer_agg" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Q("join_outer_agg", joinOuterAgg _,
       """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |GROUP BY c_custkey, c_name
-        |ORDER BY c_custkey""".stripMargin,
-    "topk_limit" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Q("topk_limit", topkLimit _,
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin,
-    "limit_offset" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin),
+    Q("limit_offset", limitOffset _,
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey LIMIT 50 OFFSET 100""".stripMargin,
-    "set_union_all" ->
+        |ORDER BY o_orderkey LIMIT 50 OFFSET 100""".stripMargin),
+    Q("set_union_all", setUnionAll _,
       """SELECT o_orderkey, o_orderstatus FROM orders WHERE o_totalprice > 450000.0
         |UNION ALL
         |SELECT o_orderkey, o_orderstatus FROM orders WHERE o_totalprice < 1000.0
-        |ORDER BY o_orderkey""".stripMargin,
-    "set_intersect" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Q("set_intersect", setIntersect _,
       """SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
         |INTERSECT
         |SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00' AND o_orderdate < TIMESTAMP '2001-01-01 00:00:00'
-        |ORDER BY o_custkey""".stripMargin,
-    "set_except" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Q("set_except", setExcept _,
       """SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
         |EXCEPT
         |SELECT o_custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00' AND o_orderdate < TIMESTAMP '2001-01-01 00:00:00'
-        |ORDER BY o_custkey""".stripMargin,
-    "sub_scalar_count" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Q("sub_scalar_count", subScalarCount _,
       """SELECT c_custkey, c_name,
         |  (SELECT COUNT(1) FROM orders o
         |   WHERE o.o_custkey = c.c_custkey
         |     AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00') AS n_recent
-        |FROM customer c ORDER BY c_custkey""".stripMargin,
-    "sub_nested" ->
+        |FROM customer c ORDER BY c_custkey""".stripMargin),
+    Q("sub_nested", subNested _,
       """SELECT s_suppkey, s_name FROM supplier
         |WHERE s_suppkey IN (
         |  SELECT l_suppkey FROM lineitem
         |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
         |  GROUP BY l_suppkey
         |  HAVING COUNT(1) > 130)
-        |ORDER BY s_suppkey""".stripMargin,
-    "sub_not_in" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Q("sub_not_in", subNotIn _,
       """SELECT p_partkey, p_name FROM part
         |WHERE p_partkey NOT IN (
         |  SELECT l_partkey FROM lineitem
         |  WHERE l_shipdate >= TIMESTAMP '2001-06-01 00:00:00')
-        |ORDER BY p_partkey""".stripMargin)
+        |ORDER BY p_partkey""".stripMargin))
 }

@@ -142,19 +142,8 @@ object ScalarQueries extends QueryFamily {
       element_at(col("embedding"), -1).as("last_v"))
       .orderBy(col("vec_id"))
 
-  val queries: Map[String, QueryFn] = Map(
-    "scalar_string" -> (scalarString _),
-    "scalar_datetime" -> (scalarDatetime _),
-    "scalar_math" -> (scalarMath _),
-    "scalar_case" -> (scalarCase _),
-    "scalar_json" -> (scalarJson _),
-    "scalar_variant" -> (scalarVariant _),
-    "scalar_array" -> (scalarArray _),
-    "scalar_array_hof" -> (scalarArrayHof _),
-    "scalar_map_struct" -> (scalarMapStruct _))
-
-  val oracles: Map[String, String] = Map(
-    "scalar_string" ->
+  val declarations: Seq[Q] = Seq(
+    Q("scalar_string", scalarString _,
       """SELECT p_partkey,
         |  UPPER(p_name) AS uname,
         |  LOWER(p_brand) AS lbrand,
@@ -164,22 +153,22 @@ object ScalarQueries extends QueryFamily {
         |  REGEXP_REPLACE(p_name, ' ', '_', 'g') AS snake_name,
         |  LPAD(p_brand, 12, '*') AS padded,
         |  (p_name LIKE '%widget%') AS is_widget
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_map_struct" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Q("scalar_map_struct", scalarMapStruct _,
       """SELECT p_partkey,
         |  p_brand AS brand_v,
         |  'brand,type' AS keys_csv,
         |  CAST(2 AS INT) AS m_size,
         |  p_brand AS st_brand,
         |  p_size AS st_size
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_array_hof" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Q("scalar_array_hof", scalarArrayHof _,
       """SELECT p_partkey,
         |  CAST(LIST_SUM(LIST_TRANSFORM(RANGE(1, p_size + 1), x -> x * x)) AS BIGINT) AS sum_sq,
         |  CAST(LEN(LIST_FILTER(RANGE(1, p_size + 1), x -> x % 2 = 0)) AS INT) AS n_even,
         |  CAST(p_size AS BIGINT) AS last_x
-        |FROM part WHERE p_size >= 1 ORDER BY p_partkey""".stripMargin,
-    "scalar_datetime" ->
+        |FROM part WHERE p_size >= 1 ORDER BY p_partkey""".stripMargin),
+    Q("scalar_datetime", scalarDatetime _,
       """SELECT o_orderkey,
         |  CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS y,
         |  CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS m,
@@ -188,8 +177,8 @@ object ScalarQueries extends QueryFamily {
         |  DATE_TRUNC('month', o_orderdate) AS month_start,
         |  o_orderdate + INTERVAL 5 DAY AS plus5d,
         |  CAST(EPOCH(o_orderdate) AS BIGINT) AS epoch_s
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scalar_math" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Q("scalar_math", scalarMath _,
       """SELECT l_orderkey, l_linenumber,
         |  ABS(l_discount - 0.05) AS abs_disc_gap,
         |  CAST(FLOOR(l_extendedprice) AS BIGINT) AS price_floor,
@@ -199,31 +188,31 @@ object ScalarQueries extends QueryFamily {
         |  l_quantity * l_quantity AS qty_sq,
         |  GREATEST(l_tax, l_discount) AS max_rate,
         |  LEAST(l_tax, l_discount) AS min_rate
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "scalar_case" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Q("scalar_case", scalarCase _,
       """SELECT o_orderkey,
         |  CASE WHEN o_totalprice > 300000.0 THEN 'high'
         |       WHEN o_totalprice > 100000.0 THEN 'mid'
         |       ELSE 'low' END AS price_band,
         |  COALESCE(NULLIF(o_orderstatus, 'P'), 'PENDING') AS status_display,
         |  CAST(o_orderstatus = 'F' AS INT) AS is_final
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scalar_json" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Q("scalar_json", scalarJson _,
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS INT) AS k_scan,
         |  CAST(json_extract_string(props, '$.k') AS INT) AS k_typed
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin),
     // the VARIANT stays inside the Spark plan; only typed extractions
     // surface, so plain JSON extraction oracles them
-    "scalar_variant" ->
+    Q("scalar_variant", scalarVariant _,
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS INT) AS k_variant,
         |  json_extract_string(props, '$.missing') AS missing_field
-        |FROM events ORDER BY event_id""".stripMargin,
-    "scalar_array" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Q("scalar_array", scalarArray _,
       """SELECT vec_id,
         |  CAST(LEN(embedding) AS INT) AS dim,
         |  embedding[1] AS first_v,
         |  embedding[-1] AS last_v
-        |FROM embeddings ORDER BY vec_id""".stripMargin)
+        |FROM embeddings ORDER BY vec_id""".stripMargin))
 }

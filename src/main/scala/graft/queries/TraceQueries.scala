@@ -105,15 +105,6 @@ object TraceQueries extends QueryFamily {
       count_distinct(col("traceData")).as("n_payloads"))
   }
 
-  val queries: Map[String, QueryFn] = Map(
-    "trace_export" -> (traceExport _),
-    "trace_export_bounded" -> (traceExportBounded _),
-    "trace_export_unordered_digest" -> (traceExportUnorderedDigest _),
-    "trace_export_empty" -> (traceExportEmpty _),
-    "trace_seed_golden" -> (traceSeedGolden _),
-    "trace_typed" -> (traceTyped _),
-    "trace_gen_replay" -> (traceGenReplay _))
-
   /** Shared by trace_export and trace_export_bounded — the bounded form
     * is DOCUMENTED as result-identical (the payload bound only rejects
     * rows that would fail both), so one literal keeps the two oracles
@@ -129,11 +120,11 @@ object TraceQueries extends QueryFamily {
       |  AND ts <= TIMESTAMP '2024-01-31 23:59:59'
       |ORDER BY paramIndex, startTime""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val declarations: Seq[Q] = Seq(
     // the generator's closed forms from generate_series alone: param
     // layout, minute cadence, +5min end, rid%3 payload ring, and the
     // constant-TRUE pruning gate
-    "trace_gen_replay" ->
+    Q("trace_gen_replay", traceGenReplay _,
       """WITH r AS (SELECT unnest(generate_series(0, 599)) AS rid),
         |g AS (SELECT rid,
         |        CAST(rid * 16 // 600 + 1 AS BIGINT) AS pidx,
@@ -148,14 +139,14 @@ object TraceQueries extends QueryFamily {
         |  END AS payload,
         |  TRUE AS pruned_partitions_ok
         |FROM g WHERE pidx BETWEEN 3 AND 6
-        |ORDER BY startTime""".stripMargin,
-    "trace_export_bounded" -> traceExportOracleSql,
-    "trace_export" -> traceExportOracleSql,
-    "trace_export_empty" ->
+        |ORDER BY startTime""".stripMargin),
+    Q("trace_export_bounded", traceExportBounded _, traceExportOracleSql),
+    Q("trace_export", traceExport _, traceExportOracleSql),
+    Q("trace_export_empty", traceExportEmpty _,
       """SELECT user_id AS paramIndex, ts AS startTime,
         |       ts + INTERVAL 60 SECOND AS endTime, props AS traceData
-        |FROM events WHERE 1 = 0""".stripMargin,
-    "trace_export_unordered_digest" ->
+        |FROM events WHERE 1 = 0""".stripMargin),
+    Q("trace_export_unordered_digest", traceExportUnorderedDigest _,
       """SELECT CAST(COUNT(1) AS BIGINT) AS n_rows,
         |       CAST(SUM(user_id) AS BIGINT) AS sum_param,
         |       MIN(ts) AS min_start,
@@ -165,8 +156,8 @@ object TraceQueries extends QueryFamily {
         |FROM events
         |WHERE user_id IN (1, 2, 3, 5, 8, 13)
         |  AND ts >= TIMESTAMP '2024-01-01 00:00:00'
-        |  AND ts <= TIMESTAMP '2024-01-31 23:59:59'""".stripMargin,
-    "trace_typed" ->
+        |  AND ts <= TIMESTAMP '2024-01-31 23:59:59'""".stripMargin),
+    Q("trace_typed", traceTyped _,
       """SELECT user_id AS paramIndex,
         |       ts AS startTime,
         |       CAST(JSON_EXTRACT(props, '$.k') AS INT) AS k
@@ -174,8 +165,8 @@ object TraceQueries extends QueryFamily {
         |WHERE user_id IN (1, 2, 3, 5, 8, 13)
         |  AND ts >= TIMESTAMP '2024-01-01 00:00:00'
         |  AND ts <= TIMESTAMP '2024-01-31 23:59:59'
-        |ORDER BY paramIndex, startTime""".stripMargin,
-    "trace_seed_golden" ->
+        |ORDER BY paramIndex, startTime""".stripMargin),
+    Q("trace_seed_golden", traceSeedGolden _,
       """SELECT * FROM (VALUES
         |  (CAST(1 AS BIGINT), TIMESTAMP '2024-01-10 10:00:00',
         |   TIMESTAMP '2024-01-10 10:05:00',
@@ -184,5 +175,5 @@ object TraceQueries extends QueryFamily {
         |   TIMESTAMP '2024-01-15 14:35:00',
         |   '{"value": 250, "status": "WARN", "temp": 45.5}')
         |) AS t(paramIndex, startTime, endTime, traceData)
-        |ORDER BY paramIndex""".stripMargin)
+        |ORDER BY paramIndex""".stripMargin))
 }

@@ -51,7 +51,10 @@ object ParquetSchemaCache {
     * cached int schema then fails the partition-value cast loudly
     * ([INVALID_PARTITION_VALUE], caught in r20 bench). Long is the
     * value-set-independent reading; data columns keep their exact
-    * inferred types (query output schemas must not move). */
+    * inferred types (query output schemas must not move). The partition
+    * schema comes from the v1 `HadoopFsRelation`; any other plan (parquet
+    * removed from `spark.sql.sources.useV1SourceList`) fails here rather
+    * than caching an unwidened schema. */
   private def inferWithStablePartitionTypes(
       spark: SparkSession, paths: Seq[String]): StructType = {
     val df = spark.read.parquet(paths: _*)
@@ -60,7 +63,10 @@ object ParquetSchemaCache {
           fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
           _, _, _, _) =>
         fs.partitionSchema.fieldNames.toSet
-      case _ => Set.empty
+      case other => throw new IllegalStateException(
+        s"ParquetSchemaCache needs a v1 HadoopFsRelation to widen partition " +
+          s"columns of ${paths.mkString(", ")}, got ${other.nodeName}; keep " +
+          "parquet in spark.sql.sources.useV1SourceList")
     }
     StructType(df.schema.map { f =>
       f.dataType match {

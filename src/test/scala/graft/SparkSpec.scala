@@ -6,23 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = LocalSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      // let AQE re-optimize CACHED plan output partitioning: a cached
-      // model-state frame built under a broadcast join otherwise keeps
-      // the full shuffle width (e.g. 32 one-row partitions), and every
-      // one of an iterative consumer's passes pays per-task overhead x
-      // width for parameter-sized data; at real scale the coalesce
-      // target keeps wide plans wide (advisory-size based)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

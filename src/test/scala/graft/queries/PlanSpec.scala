@@ -231,7 +231,7 @@ class PlanSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val out = ExtensionQueries.queries("corpus_gate_metrics")(spark, sfDir)
+      val out = SparkEntry.queries("corpus_gate_metrics")(spark, sfDir)
       // listener events post asynchronously; wait for the drain job to land
       val deadline = System.nanoTime() + 5000000000L
       while (sites.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
