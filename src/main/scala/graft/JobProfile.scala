@@ -65,16 +65,40 @@ object JobProfile {
       import scala.jdk.CollectionConverters._
       val js = jobs.values.asScala.toSeq.sortBy(_.id)
       // gaps between jobs = driver-side time
-      var prevEnd = 0L
-      js.foreach { j =>
-        val gap = if (prevEnd == 0) 0.0 else (j.t0 - prevEnd) / 1e3
-        prevEnd = math.max(prevEnd, j.t1)
+      val spans = js.map(j => (j.t0, j.t1))
+      js.zip(gaps(spans)).foreach { case (j, g) =>
+        val gap = g / 1e3
         val w = (j.t1 - j.t0) / 1e3
         println(f"job ${j.id}%3d  wall=$w%7.3f  gap=$gap%7.3f  tasks=${j.tasks}%4d  cpu=${j.cpuNs / 1e9}%7.3f  trun=${j.runMs / 1e3}%8.3f  deser=${j.deserMs / 1e3}%6.3f  gc=${j.gcMs / 1e3}%6.3f  fetch=${j.fetchMs / 1e3}%6.3f  swrite=${j.shufWriteNs / 1e9}%6.3f  ${j.desc.take(70)}")
       }
-      val jw = js.map(j => (j.t1 - j.t0)).sum / 1e3
-      println(f"sum(job walls)=$jw%.3f s; driver/other=${wall - jw}%.3f s")
+      val jw = spanUnion(spans) / 1e3
+      println(f"union(job spans)=$jw%.3f s; driver/other=${wall - jw}%.3f s")
     }
     spark.stop()
+  }
+
+  /** Total time covered by the `[start, end]` spans, overlaps counted
+    * once: broadcast and subquery jobs run alongside earlier jobs, so
+    * summing their walls would bill the same instant twice. */
+  def spanUnion(spans: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var end = Long.MinValue
+    spans.sortBy(_._1).foreach { case (t0, t1) =>
+      if (t1 > end) {
+        covered += t1 - math.max(t0, end)
+        end = t1
+      }
+    }
+    covered
+  }
+
+  /** Each span's idle lead-in, in the given order: the time from the
+    * furthest end of the spans before it to its start, 0 when it starts
+    * while an earlier span still runs. The first span has none. */
+  def gaps(spans: Seq[(Long, Long)]): Seq[Long] = {
+    val furthestBefore = spans.map(_._2).scanLeft(Long.MinValue)(math.max)
+    spans.zip(furthestBefore).map { case ((t0, _), end) =>
+      if (end == Long.MinValue) 0L else math.max(0L, t0 - end)
+    }
   }
 }

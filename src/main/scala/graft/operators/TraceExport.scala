@@ -2,8 +2,10 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.apache.spark.sql.types._
 
 import graft.functions.{gunzip_string, gzip_string}
@@ -25,11 +27,14 @@ import graft.sources.Tables
  * whole result into one heap (ParquetConversionService.java:61, its
  * documented OOM cliff) — this plan streams partition-wise: the isin/range
  * filters push into the scan, the gzip expression runs inside whole-stage
- * codegen, and the only shuffle is the range-exchange for the global sort.
- * On a real cluster the output should usually NOT be globally sorted into
- * one file; `export` keeps the reference's ORDER BY semantics, while
- * `exportUnordered` is the scale-path variant (sortWithinPartitions gives
- * per-file clustering without a global exchange).
+ * codegen, and the only shuffle is the one exchange the sort needs: a
+ * range exchange for a multi-file export, a single-partition exchange for
+ * the one-file sink (`exportToParquet(singleFile = true)`, which also
+ * skips the range-bounds sampling job). On a real cluster the output
+ * should usually NOT be globally sorted into one file; `export` keeps the
+ * reference's ORDER BY semantics, while `exportUnordered` is the
+ * scale-path variant (sortWithinPartitions gives per-file clustering
+ * without a global exchange).
  */
 object TraceExport {
 
@@ -179,18 +184,45 @@ object TraceExport {
   /** K1 sink. The reference materializes ONE in-memory parquet byte[]
     * (ParquetConversionService.java:60-85) consumed as a single file
     * (README.md:123-128); `singleFile = true` reproduces that one-artifact
-    * contract via coalesce(1). It stays off by default: one output file
-    * means one writing task — correct for a service handing a file to a
-    * caller, wrong for a 100 TB export (where the multi-part directory is
-    * the scale contract). K2 (empty → sentinel/404) is surfaced as a
-    * boolean so a service layer can map it. Returns true iff rows were
-    * written. */
+    * contract. It stays off by default: one output file means one writing
+    * task — correct for a service handing a file to a caller, wrong for a
+    * 100 TB export (where the multi-part directory is the scale contract).
+    *
+    * K2 (empty → sentinel/404) is surfaced as a boolean so a service layer
+    * can map it: true iff rows were written. The count comes from the
+    * write itself — an `Observation` of `count(1)` on the written frame —
+    * so no job reads the artifact back.
+    *
+    * The one-file plan: a globally sorted frame ([[export]]) is written
+    * as one single-partition exchange with the sort above it, which
+    * needs neither range-bounds sampling nor a range exchange (see
+    * [[singlePartitionSort]]); any other frame (the empty-ids frame,
+    * [[exportUnordered]]) goes through `coalesce(1)`. Rows and their
+    * order are those of the frame either way. */
   def exportToParquet(result: DataFrame, path: String, singleFile: Boolean = false): Boolean = {
-    val sink = if (singleFile) result.coalesce(1) else result
-    sink.write.mode("overwrite").parquet(path)
-    // cheap emptiness check on the written artifact (no double compute of
-    // the full plan — a limit-1 probe of the written files)
-    !result.sparkSession.read.parquet(path).isEmpty
+    val sink =
+      if (singleFile) singlePartitionSort(result).getOrElse(result.coalesce(1)) else result
+    val written = new Observation()
+    sink.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(path)
+    written.get("rows").asInstanceOf[Long] > 0
+  }
+
+  /** `result` with its analyzed plan `Project*(Sort(global, child))`
+    * rewritten to `Project*(Sort(global, Repartition(1, child)))`: the
+    * child's rows shuffle into one partition, which already satisfies
+    * the sort's ordered distribution, so the sort runs there and no
+    * range exchange (nor its sampling job) is planned. None when the
+    * plan has no global sort under its projections. Scoped to the
+    * one-file sink rather than a session rule, so every other ORDER BY
+    * keeps Spark's plan. */
+  private[operators] def singlePartitionSort(result: DataFrame): Option[DataFrame] = {
+    def rewrite(plan: LogicalPlan): Option[LogicalPlan] = plan match {
+      case p: Project => rewrite(p.child).map(c => p.copy(child = c))
+      case s @ Sort(_, true, child, _) =>
+        Some(s.copy(child = Repartition(1, shuffle = true, child)))
+      case _ => None
+    }
+    rewrite(result.queryExecution.analyzed).map(CatalystBridge.withPlan(result, _))
   }
 
   /** Typed output row — the ParameterRecord Avro analog as a case class

@@ -52,6 +52,16 @@ object CatalystBridge {
         df.queryExecution.toRdd, ds, isStreaming = false))
   }
 
+  /** A DataFrame over `plan`, analyzed in `df`'s session — the
+    * `executePlan` + `assertAnalyzed` pattern of `Dataset.ofRows`, which
+    * is `private[sql]`, hence this bridge. Lets an operator hand Spark a
+    * rewritten copy of a frame's analyzed plan. */
+  def withPlan(
+      df: org.apache.spark.sql.DataFrame,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** The reliable-checkpoint file backing a `Dataset.checkpoint()`
     * result (its analyzed plan is a `LogicalRDD` over the checkpointed
     * RDD), or None for any other plan. Lets iterative operators delete

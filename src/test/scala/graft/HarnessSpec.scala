@@ -4,8 +4,8 @@ import graft.queries.AnalyticsQueries
 
 /** The registry and the pieces of the bench harnesses built on it: the
   * one declaration list, Bench's selection, `BenchScale`'s probe names,
-  * the JSON string escaper shared by `Bench` and `Verify`, and
-  * `BenchScale`'s per-row scale gate. */
+  * the JSON string escaper shared by `Bench` and `Verify`,
+  * `BenchScale`'s per-row scale gate and `JobProfile`'s span arithmetic. */
 class HarnessSpec extends SparkSpec {
 
   private val sketchTwins = Map(
@@ -72,5 +72,18 @@ class HarnessSpec extends SparkSpec {
     assert(BenchScale.scaleGate("linear", 15.0, 0L, 0L)._2)
     assert(!BenchScale.scaleGate("linear", 17.0, 5L, 50L)._2)
     assert(BenchScale.scaleGate("composite", 19.0, 5L, 50L)._2)
+  }
+
+  test("JobProfile bills overlapped job spans once and never prints a negative gap") {
+    // job 2 (a broadcast, say) starts inside job 1; job 3 starts after
+    // both, job 4 inside job 3
+    val spans = Seq((0L, 100L), (40L, 150L), (200L, 300L), (250L, 260L))
+    assert(JobProfile.spanUnion(spans) == 250L) // not the 360 summed walls
+    assert(JobProfile.gaps(spans) == Seq(0L, 0L, 50L, 0L))
+    // the gaps and the union cover the profiled interval exactly
+    assert(JobProfile.spanUnion(spans) + JobProfile.gaps(spans).sum == 300L)
+    // disjoint spans: the union is the plain sum; order does not matter
+    assert(JobProfile.spanUnion(Seq((30L, 40L), (0L, 10L))) == 20L)
+    assert(JobProfile.spanUnion(Nil) == 0L && JobProfile.gaps(Nil).isEmpty)
   }
 }

@@ -2,12 +2,36 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.SparkSpec
 
-class TraceExportSpec extends SparkSpec {
+class TraceExportSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val jan0 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val jan1 = Timestamp.valueOf("2024-01-31 23:59:59")
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+
+  /** The shuffle exchanges Spark plans for `df` (before any stage runs). */
+  private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  /** Every export shape with an empty result: no ids (the 0-partition
+    * frame), a window that matches nothing, ids the table lacks. */
+  private def emptyExports(trace: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "empty ids" -> TraceExport.export(trace, Seq.empty, jan0, jan1),
+    "empty window" -> TraceExport.export(trace, Seq(1L, 2L, 3L),
+      Timestamp.valueOf("2023-01-01 00:00:00"), Timestamp.valueOf("2023-01-31 00:00:00")),
+    "absent ids" -> TraceExport.export(trace, Seq(99L, 100L), jan0, jan1))
 
   test("golden: README filter {1,2} over reference seed → exactly the 2 reference rows, in order") {
     val out = TraceExport.export(TraceExport.referenceSeed(spark), Seq(1L, 2L), jan0, jan1)
@@ -100,10 +124,59 @@ class TraceExportSpec extends SparkSpec {
     val dataFiles = new java.io.File(s"$dir/one").listFiles()
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
     assert(dataFiles.length == 1, dataFiles.map(_.getName).toSeq)
-    // coalesce(1) concatenates range partitions in index order — the
+    // the sort runs above the single-partition exchange, so the
     // reference's global ORDER BY survives into the single artifact
     val back = spark.read.parquet(s"$dir/one").collect()
     assert(back.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("K2: every empty path reports no data in both sink modes, and strict mode throws") {
+    val dir = tmp("graft-k2")
+    emptyExports(TraceExport.referenceSeed(spark)).zipWithIndex.foreach { case ((what, out), i) =>
+      assert(!TraceExport.exportToParquet(out, s"$dir/multi$i"), what)
+      assert(!TraceExport.exportToParquet(out, s"$dir/single$i", singleFile = true), what)
+      assert(dataFiles(s"$dir/single$i").length == 1, what)
+      assert(spark.read.parquet(s"$dir/single$i").isEmpty, what)
+      intercept[NoDataFoundException](TraceExport.exportToParquetStrict(out, s"$dir/strict$i"))
+    }
+  }
+
+  test("one-file sink: a global sort writes through one single-partition exchange, no range exchange") {
+    val out = TraceExport.export(TraceExport.fromEvents(spark, sfDir), Seq(1L, 2L, 3L), jan0, jan1)
+    // the multi-file export keeps Spark's range exchange for the global sort
+    assert(exchanges(out).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]))
+    val single = exchanges(TraceExport.singlePartitionSort(out).get)
+    assert(single.length == 1, single)
+    assert(single.head.outputPartitioning.numPartitions == 1)
+    assert(!single.head.outputPartitioning.isInstanceOf[RangePartitioning])
+  }
+
+  test("one-file sink: frames without a global sort fall back to coalesce(1), one file each") {
+    val dir = tmp("graft-fallback")
+    val seed = TraceExport.referenceSeed(spark)
+    val unordered = TraceExport.exportUnordered(seed, Seq(1L, 2L, 3L), jan0, jan1)
+    val noIds = TraceExport.export(seed, Seq.empty, jan0, jan1)
+    assert(TraceExport.singlePartitionSort(unordered).isEmpty)
+    assert(TraceExport.singlePartitionSort(noIds).isEmpty)
+    assert(TraceExport.exportToParquet(unordered, s"$dir/unordered", singleFile = true))
+    assert(dataFiles(s"$dir/unordered").length == 1)
+    assert(spark.read.parquet(s"$dir/unordered").count() == 3)
+    assert(!TraceExport.exportToParquet(noIds, s"$dir/noids", singleFile = true))
+    assert(dataFiles(s"$dir/noids").length == 1)
+  }
+
+  test("one-file sink: the rewritten write equals the coalesce(1) write, row for row and in order") {
+    val dir = tmp("graft-same")
+    val trace = TraceExport.fromEvents(spark, sfDir)
+    val ids = (1L to 40L).toSeq
+    val out = TraceExport.export(trace, ids, jan0, Timestamp.valueOf("2024-12-31 23:59:59"))
+    assert(TraceExport.exportToParquet(out, s"$dir/rewrite", singleFile = true))
+    out.coalesce(1).write.parquet(s"$dir/coalesce")
+    val a = spark.read.parquet(s"$dir/rewrite").collect().toSeq
+    val b = spark.read.parquet(s"$dir/coalesce").collect().toSeq
+    assert(a.length > 100, a.length)
+    assert(dataFiles(s"$dir/rewrite").length == 1 && dataFiles(s"$dir/coalesce").length == 1)
+    assert(a == b)
   }
 
   test("TIMESTAMP_MILLIS parity: physical schema matches the reference's Avro output") {
@@ -122,6 +195,9 @@ class TraceExportSpec extends SparkSpec {
           col("startTime").cast("timestamp").as("startTime"),
           col("endTime").cast("timestamp").as("endTime"),
           col("traceData"))
+      // the projection over `export` keeps the one-file rewrite
+      assert(TraceExport.singlePartitionSort(out).exists(o =>
+        !exchanges(o).exists(_.outputPartitioning.isInstanceOf[RangePartitioning])))
       assert(TraceExport.exportToParquet(out, s"$dir/millis", singleFile = true))
     } finally spark.conf.set(key, prev)
 
