@@ -110,6 +110,29 @@ object TraceExport {
       col("endTime"),
       gunzip_string(col("traceData"), maxBytes = maxPayloadBytes).as("traceData"))
 
+  /** One export request, shared by every variant so they cannot drift:
+    * the A1 window check, the F3 empty-ids short-circuit, [[filtered]],
+    * the variant's `arrange` step, then [[outputProjection]].
+    *
+    * A1 (DataExportController.java:39-43): an inverted range is a caller
+    * error, not an empty result. F3 (ParameterDataRepository.java:54-56):
+    * an empty id list yields an empty result without scanning. Catalyst
+    * would also fold isin() on an empty list, but the explicit guard
+    * keeps the semantic visible and plan-free. A stream keeps the folded
+    * filter instead, so its result is still a stream. */
+  private def request(
+      trace: DataFrame,
+      ids: Seq[Long],
+      start: Timestamp,
+      end: Timestamp,
+      maxPayloadBytes: Long)(arrange: DataFrame => DataFrame): DataFrame = {
+    require(!start.after(end), s"startTime must be before endTime: $start > $end")
+    if (ids.isEmpty && !trace.isStreaming)
+      trace.sparkSession.createDataFrame(trace.sparkSession.sparkContext.emptyRDD[Row], outputSchema)
+    else
+      arrange(filtered(trace, ids, start, end)).select(outputProjection(maxPayloadBytes): _*)
+  }
+
   /** The reference query: ids IN-list + closed startTime interval (both ends
     * inclusive, END_TIME unconstrained — ParameterDataRepository.java:65-67),
     * ORDER BY paramIndex, startTime, decompress payload to text.
@@ -126,22 +149,9 @@ object TraceExport {
       ids: Seq[Long],
       start: Timestamp,
       end: Timestamp,
-      maxPayloadBytes: Long = Long.MaxValue): DataFrame = {
-    // A1 semantic check (DataExportController.java:39-43): inverted range
-    // is a caller error, not an empty result.
-    require(!start.after(end), s"startTime must be before endTime: $start > $end")
-    if (ids.isEmpty) {
-      // F3: empty id list → empty result without scanning
-      // (ParameterDataRepository.java:54-56). Catalyst would also fold
-      // isin() on an empty list, but the explicit guard keeps the
-      // semantic visible and plan-free.
-      return trace.sparkSession.createDataFrame(
-        trace.sparkSession.sparkContext.emptyRDD[Row], outputSchema)
-    }
-    filtered(trace, ids, start, end)
-      .orderBy(col("paramIndex").asc, col("startTime").asc)
-      .select(outputProjection(maxPayloadBytes): _*)
-  }
+      maxPayloadBytes: Long = Long.MaxValue): DataFrame =
+    request(trace, ids, start, end, maxPayloadBytes)(
+      _.orderBy(col("paramIndex").asc, col("startTime").asc))
 
   /** Scale-path variant: no global sort (range exchange) — cluster within
     * output partitions only. Preferred at 100 TB where a total order across
@@ -153,15 +163,9 @@ object TraceExport {
       ids: Seq[Long],
       start: Timestamp,
       end: Timestamp,
-      maxPayloadBytes: Long = Long.MaxValue): DataFrame = {
-    require(!start.after(end), s"startTime must be before endTime: $start > $end")
-    if (ids.isEmpty)
-      return trace.sparkSession.createDataFrame(
-        trace.sparkSession.sparkContext.emptyRDD[Row], outputSchema)
-    filtered(trace, ids, start, end)
-      .sortWithinPartitions(col("paramIndex"), col("startTime"))
-      .select(outputProjection(maxPayloadBytes): _*)
-  }
+      maxPayloadBytes: Long = Long.MaxValue): DataFrame =
+    request(trace, ids, start, end, maxPayloadBytes)(
+      _.sortWithinPartitions(col("paramIndex"), col("startTime")))
 
   /** Streaming flagship: the same filter→decompress→project chain over an
     * unbounded trace stream (`spark.readStream` on a landing directory, or
@@ -175,11 +179,8 @@ object TraceExport {
       ids: Seq[Long],
       start: Timestamp,
       end: Timestamp,
-      maxPayloadBytes: Long = Long.MaxValue): DataFrame = {
-    require(!start.after(end), s"startTime must be before endTime: $start > $end")
-    filtered(trace, ids, start, end)
-      .select(outputProjection(maxPayloadBytes): _*)
-  }
+      maxPayloadBytes: Long = Long.MaxValue): DataFrame =
+    request(trace, ids, start, end, maxPayloadBytes)(identity)
 
   /** K1 sink. The reference materializes ONE in-memory parquet byte[]
     * (ParquetConversionService.java:60-85) consumed as a single file
