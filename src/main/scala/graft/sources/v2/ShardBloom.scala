@@ -4,9 +4,9 @@ import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Per-shard key BLOOM sidecar (`_BLOOM`) for [[ShardSink]] tables — the
@@ -52,18 +52,17 @@ import org.apache.spark.sql.types._
  * / geometry than the query is ignored wholesale. Every degradation
  * direction is "scan more", never "miss a row".
  *
- * Hashing contract: ONE implementation on both sides. The writer hashes
- * each key with [[org.apache.spark.sql.catalyst.expressions.XxHash64Function]]
- * (seed 42 — the exact function and seed behind Spark's `xxhash64()`
- * column), derives a second hash by chaining the [[Salt]] constant, and
- * sets k=[[KHashes]] bits at `(h1 + i*(h2|1)) mod m` (Kirsch-
- * Mitzenmacher). The read side computes the SAME positions with the
- * `xxhash64` column function — writer and prober cannot drift because
- * they run the same code. Floats are normalized (-0.0 → 0.0, NaN →
- * canonical) on both sides before hashing, matching the join equality
- * the prune must be conservative against. Position arithmetic stays
- * below 2^32 (`(h1 mod m) + i*((h2|1) mod m)`), so it is
- * overflow-free under ANSI evaluation.
+ * Hashing contract: ONE implementation, the writer's. Each key is hashed
+ * with [[org.apache.spark.sql.catalyst.expressions.XxHash64Function]]
+ * (seed 42, the function behind Spark's `xxhash64()`), a second hash
+ * chains the [[Salt]] constant, and k=[[KHashes]] bits are set at
+ * `(h1 + i*(h2|1)) mod m` (Kirsch-Mitzenmacher). The prober
+ * ([[candidateShardsLocal]], on the driver or per key-frame partition)
+ * calls the same [[hash1]]/[[positions]], so writer and prober cannot
+ * drift. Floats are normalized (-0.0 → 0.0, NaN → canonical) before
+ * hashing, matching the SQL equality the prune must be conservative
+ * against. Position arithmetic stays below 2^32
+ * (`(h1 mod m) + i*((h2|1) mod m)`), so it cannot overflow.
  */
 private[graft] object ShardBloom {
 
@@ -78,8 +77,7 @@ private[graft] object ShardBloom {
   val DefaultBits = 65536
   val KHashes = 4
 
-  /** Seed link for the second hash: h2 = xxhash64(Salt, seed = h1) —
-    * expressible on the column side as `xxhash64(key, lit(Salt))`. */
+  /** Seed link for the second hash: h2 = xxhash64(Salt, seed = h1). */
   val Salt = 0x5f4a7c15L
 
   private val NullMarker = "-"
@@ -95,15 +93,14 @@ private[graft] object ShardBloom {
     * two-value domain — a bloom is meaningless). Tags are the EXACT
     * [[ShardSchema]] tags, not the stats-collapsed ones: xxhash64 of an
     * int and of the same value as long differ, so the prober must cast
-    * the key column to the precise written type. */
+    * the keys to the precise written type. */
   def tagFor(dt: DataType): Option[String] = dt match {
     case StringType | LongType | IntegerType | ShortType | ByteType |
         DoubleType | FloatType => Some(ShardSchema.tagOf(dt))
     case _ => None
   }
 
-  // ---- hashing (the writer half; the prober builds the same values
-  // ---- with Spark columns — see positionsCol)
+  // ---- hashing (one implementation: the writer and the prober)
 
   private val xx = org.apache.spark.sql.catalyst.expressions.XxHash64Function
 
@@ -125,8 +122,7 @@ private[graft] object ShardBloom {
     xx.hash(norm, dt, 42L)
   }
 
-  /** h2 chains the salt: identical to `xxhash64(key, lit(Salt))`
-    * (the expression folds left: hash(Salt: long, seed = h1)). */
+  /** h2 chains the salt: hash(Salt: long, seed = h1). */
   def hash2(h1: Long): Long =
     xx.hash(java.lang.Long.valueOf(Salt), LongType, h1)
 
@@ -137,25 +133,6 @@ private[graft] object ShardBloom {
     val b = java.lang.Math.floorMod(h2odd, mBits.toLong)
     Array.tabulate(KHashes)(i =>
       java.lang.Math.floorMod(a + i.toLong * b, mBits.toLong).toInt)
-  }
-
-  /** The SAME k positions as a column expression over a key column of
-    * the written type — the prober's half of the hashing contract. */
-  def positionsCol(key: Column, dt: DataType, mBits: Int): Seq[Column] = {
-    val normed = dt match {
-      case DoubleType =>
-        when(isnan(key), lit(Double.NaN))
-          .when(key === lit(0.0d), lit(0.0d)).otherwise(key)
-      case FloatType =>
-        when(isnan(key), lit(Float.NaN))
-          .when(key === lit(0.0f), lit(0.0f)).otherwise(key)
-      case _ => key
-    }
-    val h1 = xxhash64(normed)
-    val h2odd = xxhash64(normed, lit(Salt)).bitwiseOR(lit(1L))
-    val a = pmod(h1, lit(mBits.toLong))
-    val b = pmod(h2odd, lit(mBits.toLong))
-    (0 until KHashes).map(i => pmod(a + lit(i.toLong) * b, lit(mBits.toLong)))
   }
 
   def setBit(bits: Array[Byte], pos: Int): Unit =
@@ -262,58 +239,17 @@ private[graft] object ShardBloom {
     ShardPublish.writeAtomic(conf, fs, bloomPath(dir), serializeAll(sections))
 
   /**
-   * Bloom-prune `manifested` down to the shards that might contain a
-   * key. Fully relational — the key frame is joined, never collected:
-   *
-   *  1. each key explodes into its (distinct) bit positions — k rows;
-   *  2. the driver-parsed filters explode into their SET-bit positions
-   *     (bounded by shards × min(m, k·keys-per-shard) — sidecar-sized,
-   *     already driver memory by the single-file metadata design);
-   *  3. an equi-join on position + a per-(key, shard) count: a shard is
-   *     a HIT for a key iff every one of the key's positions is set;
-   *  4. distinct hit shards collect (≤ shard count, never data).
-   *
-   * Shards without a `_BLOOM` entry stay candidates; all-null-key
-   * shards (`-`) can never satisfy an equality join and are pruned; an
-   * absent / differently-keyed / differently-typed sidecar returns
-   * `manifested` unchanged (the safe fallback direction).
-   */
-  def candidateShards(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame, // one column named __k
-      manifested: Seq[String]): Seq[String] =
-    candidateShards(spark, readIfExists(fs, dir), keyType, keyCol, keys,
-      manifested)
-
-  /** Absolute driver budget for the relational prune's exploded set-bit
-    * rows (≈ tens of MB of (name, pos) pairs): the saturation cutoff
-    * bounds per-shard DENSITY, not total VOLUME — at 2^26-bit filters ×
-    * tens of thousands of shards the explode would be driver-memory
-    * bound. Shards past the budget stay scan candidates (the safe
-    * direction); the never-collected large key sets that reach this
-    * path still get a partial prune from the shards within budget. */
-  private[v2] val MaxExplodedSetBits = 1 << 22
-
-  /**
-   * Driver-local bloom probe for an ALREADY-BOUNDED key set — the prune
-   * [[graft.sources.v2.ShardReader.readByKey]]'s small-key path uses:
-   * the keys were collected under the `maxPushKeys` bound, so each is
-   * hashed with the writer's own [[hash1]]/[[positions]] code (one
-   * implementation, zero drift by construction) and tested against the
-   * parsed filter bytes directly — O(#shards × keys × k) bit tests,
-   * ZERO Spark jobs, zero per-set-bit row materialization (the
-   * relational path's explode is O(#shards × mBits) driver work that a
-   * 128-key lookup never needs). `keyVals` are EXTERNAL values already
-   * cast to `keyType` (strings as [[String]] — converted to UTF8String
-   * here); nulls must be pre-filtered (null never equals). Same hint
-   * contract: unusable sidecar → `manifested` unchanged; no entry →
-   * candidate; `-` (all-null-key shard) → pruned; saturation needs no
-   * special case (probing a dense filter is O(k) and simply answers
-   * "maybe").
+   * The bloom test — the ONE implementation, shared by the driver probe
+   * and the key-frame probe ([[ShardPrune]] composes it with the range
+   * test): each key is hashed with the writer's own [[hash1]]/
+   * [[positions]] and tested against the parsed filter bytes,
+   * O(#shards × keys × k) bit tests. `keyVals` are already cast to
+   * `keyType`, external or Catalyst-internal (strings as [[String]] or
+   * UTF8String); nulls must be pre-filtered (null never equals). Hint
+   * contract: an absent / differently-keyed / differently-typed sidecar
+   * returns `manifested` unchanged; no entry → candidate; `-` (all-null-
+   * key shard) → pruned; a saturated filter needs no special case (it
+   * simply answers "maybe"). Result order is `manifested`'s.
    */
   def candidateShardsLocal(
       bloom: Option[Bloom],
@@ -327,14 +263,8 @@ private[graft] object ShardBloom {
     usable match {
       case None => manifested
       case Some(b) =>
-        val keyPos: Seq[Array[Int]] = keyVals.map { v =>
-          val internal: Any = keyType match {
-            case StringType =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(v.toString)
-            case _ => v
-          }
-          positions(hash1(internal, keyType), b.mBits)
-        }
+        val keyPos: Seq[Array[Int]] = keyVals.map(v => positions(
+          hash1(ShardRowReader.toComparable(v, keyType), keyType), b.mBits))
         manifested.filter { n =>
           b.filters.get(n) match {
             case None => true        // no sidecar entry: always a candidate
@@ -345,144 +275,119 @@ private[graft] object ShardBloom {
         }
     }
   }
-
-  /** Same prune over a PRE-PARSED sidecar (see [[ShardStats]]'s twin). */
-  def candidateShards(
-      spark: SparkSession,
-      bloom: Option[Bloom],
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame,
-      manifested: Seq[String]): Seq[String] = {
-    val usable = bloom.filter(b =>
-      b.column == keyCol && tagFor(keyType).contains(b.tag) &&
-        b.kHashes == KHashes)
-    usable match {
-      case None => manifested
-      case Some(b) =>
-        val (withBloom, without0) = manifested.partition(b.filters.contains)
-        // SATURATION short-circuit: a filter with most bits set can
-        // almost never prune (FP per key ≥ density^k), and exploding its
-        // set bits would cost O(m) driver rows for nothing — an
-        // undersized bloom must degrade to "this shard is a candidate",
-        // never to driver-memory blowup. Density is one popcount pass
-        // over the already-parsed bytes.
-        val scored = withBloom.map { n =>
-          val f = b.filters(n)
-          val pop = f.fold(0)(bytes =>
-            bytes.iterator.map(x => java.lang.Integer.bitCount(x & 0xff)).sum)
-          (n, f, pop)
-        }
-        val (unsat, saturated) = scored.partition { case (_, f, pop) =>
-          f.forall(_ => pop.toDouble / b.mBits <= 0.5) }
-        // ABSOLUTE volume budget on top of the density cutoff: explode
-        // shards first-come until [[MaxExplodedSetBits]] total set bits,
-        // the rest stay candidates — the prune degrades partially, the
-        // driver heap never scales with #shards × mBits
-        var budget = MaxExplodedSetBits
-        val (usableF, overBudget) = unsat.partition { case (_, f, pop) =>
-          if (f.isEmpty) true // all-null shard: zero rows, prunes below
-          else if (pop <= budget) { budget -= pop; true }
-          else false
-        }
-        val without = without0 ++ saturated.map(_._1) ++ overBudget.map(_._1)
-        val present = usableF.flatMap { case (n, f, _) => f.map((n, _)) }
-        if (present.isEmpty) without
-        else {
-          import spark.implicits._
-          // (2) set-bit table, built from the already-parsed sidecar
-          val setBits = present.flatMap { case (name, bytes) =>
-            (0 until b.mBits).iterator
-              .filter(p => getBit(bytes, p)).map(p => (name, p.toLong))
-          }.toDF("__shard", "__pos")
-          // (1) per-key distinct positions + how many a full hit needs —
-          // computed BEFORE the explode (no window, no extra exchange);
-          // distinct positions because two of the k hashes can collide
-          // on one bit, and a hit must then need one fewer match
-          val posCols = positionsCol(col("__k").cast(keyType), keyType, b.mBits)
-          val keyPos = keys
-            .select(col("__k").cast(keyType).as("__k"))
-            .na.drop()
-            // distinct AFTER the cast: two distinct input keys that
-            // collapse to one value under the cast (string "5"/"05"
-            // against a long column) would otherwise double __got and
-            // make a TRUE hit shard fail the __got === __need equality —
-            // a silently pruned shard, the one failure direction this
-            // file must never take
-            .distinct()
-            .withColumn("__parr", array_distinct(array(posCols: _*)))
-            .withColumn("__need", size(col("__parr")).cast("long"))
-            .withColumn("__pos", explode(col("__parr")))
-            .drop("__parr")
-          val hit = keyPos
-            .join(broadcast(setBits), "__pos")
-            .groupBy(col("__k"), col("__shard"), col("__need"))
-            .agg(count(lit(1)).as("__got"))
-            .filter(col("__got") === col("__need"))
-            .select(col("__shard")).distinct()
-            .collect().map(_.getString(0)).toSeq // ≤ shard count
-          hit ++ without
-        }
-    }
-  }
 }
 
 /**
- * Composition of the two pruning hints for keyed maintenance and point
- * lookup: range prune (`_STATS`) first, bloom prune (`_BLOOM`) on the
- * survivors. The intersection of hints is still a hint — each absent /
- * unusable / differently-keyed sidecar passes its input through
- * unchanged, so every degradation direction is "scan more", never
- * "miss a row". On a sequential-id table the ranges do the work; on a
- * digest-keyed table the ranges pass everything and the bloom does.
+ * The one shard-prune probe for keyed maintenance, point lookup and the
+ * V2 scan: "may this shard hold one of these keys?", answered by the
+ * `_STATS` range test ([[ShardStats.candidateShardsLocal]]) and the
+ * `_BLOOM` test ([[ShardBloom.candidateShardsLocal]]), composed once
+ * ([[compose]]) as
+ *
+ *   (range hits ∪ shards with no stats entry)
+ *     ∩ (bloom hits ∪ shards with no bloom entry).
+ *
+ * The intersection of hints is still a hint — each absent / unusable /
+ * differently-keyed sidecar passes its input through unchanged, so
+ * every degradation direction is "scan more", never "miss a row". On a
+ * sequential-id table the ranges do the work; on a digest-keyed table
+ * the ranges pass everything and the bloom does.
+ *
+ * Two forms of the same function: [[candidateShardsLocal]] probes a
+ * bounded key set already on the driver (zero Spark jobs), and
+ * [[candidateShards]] probes a key frame per partition on the executors
+ * (one job, a collect bounded by the shard count).
  */
 private[graft] object ShardPrune {
-  def candidateShards(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame, // one column named __k
-      manifested: Seq[String]): Seq[String] =
-    candidateShards(spark,
-      ShardStats.readAll(fs, dir).find(_.column == keyCol),
-      ShardBloom.readAll(fs, dir).find(_.column == keyCol),
-      keyType, keyCol, keys, manifested)
 
-  /** Pre-parsed-sidecar form: one metadata read per mutation, not one
-    * per consumer. */
-  def candidateShards(
-      spark: SparkSession,
+  /** Keys per probe call on an executor: bounds the memory a partition
+    * holds while its hits shrink the shards left to probe. */
+  private val ProbeBatch = 4096
+
+  /** Each sidecar's candidates among its own shard list, for one batch. */
+  private def hints(
       stats: Option[ShardStats.Stats],
       bloom: Option[ShardBloom.Bloom],
       keyType: DataType,
       keyCol: String,
-      keys: DataFrame,
-      manifested: Seq[String]): Seq[String] = {
-    val ranged = ShardStats.candidateShards(
-      spark, stats, keyType, keyCol, keys, manifested)
-    ShardBloom.candidateShards(
-      spark, bloom, keyType, keyCol, keys, ranged)
-  }
+      keyVals: Seq[Any],
+      ranged: Seq[String],
+      bloomed: Seq[String]): (Seq[String], Seq[String]) =
+    (ShardStats.candidateShardsLocal(stats, keyType, keyCol, keyVals, ranged),
+      ShardBloom.candidateShardsLocal(bloom, keyType, keyCol, keyVals, bloomed))
 
-  /** Driver-local twin for an ALREADY-BOUNDED, already-cast key set:
-    * both prunes probe the parsed sidecars directly — ZERO Spark jobs
-    * for the whole prune (see [[ShardStats.candidateShardsLocal]] /
-    * [[ShardBloom.candidateShardsLocal]]). */
+  /** The composition, in `manifested` order. */
+  private def compose(
+      manifested: Seq[String], ranged: Set[String], bloomed: Set[String])
+      : Seq[String] =
+    manifested.filter(n => ranged(n) && bloomed(n))
+
+  /** Driver probe of an ALREADY-BOUNDED key set, cast to `keyType`
+    * (see [[ShardStats.candidateShardsLocal]] for the value forms):
+    * zero Spark jobs. */
   def candidateShardsLocal(
-      fs: FileSystem,
-      dir: Path,
+      stats: Seq[ShardStats.Stats],
+      bloom: Seq[ShardBloom.Bloom],
       keyType: DataType,
       keyCol: String,
       keyVals: Seq[Any],
       manifested: Seq[String]): Seq[String] = {
-    val ranged = ShardStats.candidateShardsLocal(
-      ShardStats.readAll(fs, dir).find(_.column == keyCol),
-      keyType, keyCol, keyVals, manifested)
-    ShardBloom.candidateShardsLocal(
-      ShardBloom.readAll(fs, dir).find(_.column == keyCol),
-      keyType, keyCol, keyVals, ranged)
+    val (r, b) = hints(stats.find(_.column == keyCol),
+      bloom.find(_.column == keyCol), keyType, keyCol, keyVals,
+      manifested, manifested)
+    compose(manifested, r.toSet, b.toSet)
+  }
+
+  /**
+   * Key-frame probe: the same tests over `keys` (one column, any type
+   * that casts to `keyType`; never collected). Shards each test keeps
+   * for ANY key set (no entry, unusable sidecar) are settled on the
+   * driver; the rest are probed per partition over the Catalyst-internal
+   * cast values, with the parsed sidecars shipped once as a broadcast.
+   * Each partition returns its range and bloom hits separately, so the
+   * driver unions them before composing — the result is exactly
+   * [[candidateShardsLocal]] over the whole key set. One Spark job (plus
+   * whatever `keys`' own plan needs), none when nothing is left to
+   * probe.
+   */
+  def candidateShards(
+      spark: SparkSession,
+      stats: Seq[ShardStats.Stats],
+      bloom: Seq[ShardBloom.Bloom],
+      keyType: DataType,
+      keyCol: String,
+      keys: DataFrame,
+      manifested: Seq[String]): Seq[String] = {
+    val st = stats.find(_.column == keyCol)
+    val bl = bloom.find(_.column == keyCol)
+    val (r0, b0) = hints(st, bl, keyType, keyCol, Nil, manifested, manifested)
+      match { case (r, b) => (r.toSet, b.toSet) }
+    val open = manifested.filterNot(n => r0(n) && b0(n))
+    if (open.isEmpty) return manifested
+    val openR = open.filterNot(r0)
+    val openB = open.filterNot(b0)
+    val bc = spark.sparkContext.broadcast((st, bl))
+    val parts = try keys.select(keys.col(keys.columns.head).cast(keyType))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val (s, b) = bc.value
+        var (leftR, leftB) = (openR, openB)
+        val hitR, hitB = Seq.newBuilder[String]
+        rows.filter(!_.isNullAt(0))
+          .map(_.get(0, keyType) match {
+            case u: UTF8String => u.clone() // the row buffer is reused
+            case v => v
+          })
+          .grouped(ProbeBatch)
+          .takeWhile(_ => leftR.nonEmpty || leftB.nonEmpty)
+          .foreach { batch =>
+            val (r, h) = hints(s, b, keyType, keyCol, batch.toSeq, leftR, leftB)
+            hitR ++= r; hitB ++= h
+            leftR = leftR.filterNot(r.toSet); leftB = leftB.filterNot(h.toSet)
+          }
+        Iterator((hitR.result(), hitB.result()))
+      }.collect() // one (range, bloom) hit pair per partition: ≤ shard count
+    finally bc.destroy()
+    compose(manifested, r0 ++ parts.flatMap(_._1), b0 ++ parts.flatMap(_._2))
   }
 }
 

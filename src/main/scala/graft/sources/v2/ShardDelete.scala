@@ -17,10 +17,11 @@ import org.apache.spark.sql.types.StructType
  * Only the shards that actually CONTAIN a matching key are rewritten,
  * and — when the table carries `_STATS` key ranges ([[ShardStats]],
  * written by appends with the `statsColumn` option) — only the shards
- * whose [min,max] can contain a key are even READ: hit discovery is a
- * broadcast range-join of the key set against the ≤-file-count shard
- * range table, then one scan of the surviving candidates for per-shard
- * match counts (a bounded, ≤-shard-count collect, the house model-state
+ * whose [min,max] can contain a key are even READ: hit discovery probes
+ * the key set against the ≤-file-count shard ranges (and `_BLOOM`
+ * filters) per key-frame partition ([[ShardPrune.candidateShards]]),
+ * then one scan of the surviving candidates gives per-shard match
+ * counts (a bounded, ≤-shard-count collect, the house model-state
  * contract). At 100 TB a 5-id takedown reads the handful of shards the
  * manifest stats cannot rule out, not the table. Without stats (or
  * stats on a different column) discovery degrades to one manifest-scoped
@@ -52,8 +53,8 @@ object ShardDelete {
 
   /** Hit-discovery prune, exposed for spec-level file-list asserts and
     * the stage-timed scale probes: the shard names a delete/upsert of
-    * `keys` must read, given the table's `_STATS` (all manifested shards
-    * when stats are absent or keyed differently). */
+    * `keys` must read, given the table's `_STATS`/`_BLOOM` sidecars (all
+    * manifested shards when they are absent or keyed differently). */
   def candidateShards(
       spark: SparkSession,
       path: String,
@@ -61,11 +62,9 @@ object ShardDelete {
       keyCol: String,
       keys: DataFrame): Seq[String] = {
     val t = ShardPublish.table(spark, path)
-    val old = ShardPublish.manifest(t)
-    val keyDf = keys.select(keys.columns.head).distinct()
-      .withColumnRenamed(keys.columns.head, "__k")
-    ShardPrune.candidateShards(spark, t.fs, t.dir,
-      schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
+    ShardPrune.candidateShards(spark, ShardStats.readAll(t.fs, t.dir),
+      ShardBloom.readAll(t.fs, t.dir), schema(keyCol).dataType, keyCol, keys,
+      ShardPublish.manifest(t).map(_._1))
   }
 
   /**
@@ -96,13 +95,13 @@ object ShardDelete {
     ShardSchema.requireCovers(tableSchema, dir, schema, "deleteByKey")
     if (old.isEmpty) return 0L
 
-    val keyDf = keys.select(keys.columns.head).distinct()
-      .withColumnRenamed(keys.columns.head, "__k")
-    // manifest-level prune FIRST: shards whose stats range cannot hold
-    // any key are never read (zero data I/O for them)
-    val candidates = ShardPrune.candidateShards(spark,
-      tableStats.find(_.column == keyCol), tableBloom.find(_.column == keyCol),
-      schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
+    val rawKeys = keys.toDF("__k")
+    val keyDf = rawKeys.distinct()
+    // manifest-level prune FIRST: shards whose sidecars rule out every
+    // key are never read (zero data I/O for them); the probe needs no
+    // distinct, so it skips the key frame's shuffle
+    val candidates = ShardPrune.candidateShards(spark, tableStats, tableBloom,
+      schema(keyCol).dataType, keyCol, rawKeys, old.map(_._1))
     if (candidates.isEmpty) return 0L
     val files = candidates.map(n => new Path(dir, n).toString)
     val fmtD = tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl)
@@ -266,8 +265,7 @@ object ShardDelete {
     // manifest-level prune, then ONE pass over the candidates feeds the
     // rollup below — per-shard hit counts and the matched-key count come
     // out of the same action
-    val candidates = ShardPrune.candidateShards(spark,
-      tableStats.find(_.column == keyCol), tableBloom.find(_.column == keyCol),
+    val candidates = ShardPrune.candidateShards(spark, tableStats, tableBloom,
       schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
     val files = candidates.map(n => new Path(dir, n).toString)
     val fmtU = tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl)

@@ -2,6 +2,8 @@ package graft.sources.v2
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -70,6 +72,10 @@ object ShardReader {
   def readEvolved(spark: SparkSession, path: String): DataFrame =
     read(spark, path, tableSchema(spark, path))
 
+  /** Distinct keys up to which [[readByKey]] collects the key set and
+    * pushes it into the scan as an `IN`-list. */
+  private val MaxPushKeys = 128
+
   /** Keyed point lookup — the read-side payoff of the `_STATS` ranges
     * and `_BLOOM` filters ([[ShardPrune]]): return exactly the rows
     * whose `keyCol` is in `keys` (one-column DataFrame), READING only
@@ -79,29 +85,27 @@ object ShardReader {
     * sidecars it degrades to a manifest-scoped scan + semi-join —
     * correct, just un-pruned.
     *
-    * Key-set handling: a PROVABLY SMALL key set (≤ `maxPushKeys`
-    * distinct keys, checked with a limit-bounded count — the collect is
-    * bounded by the constant, never the data) becomes an `IN`-list
-    * FILTER instead of a join. That filter reaches the scan
+    * Key-set handling: a limit-bounded collect of the distinct keys
+    * decides the path (bounded by the constant, never the data). A
+    * PROVABLY SMALL key set (at most 128 distinct keys) becomes an
+    * `IN`-list FILTER instead of a join. That filter reaches the scan
     * (`PushedFilters: [In(key, ...)]`): on a parquet-format table the
     * row groups whose column stats exclude every key are skipped
     * without decoding — the in-shard prune on top of the shard-level
-    * one. The collected keys also probe the `_STATS`/`_BLOOM` sidecars
-    * DRIVER-LOCALLY ([[ShardPrune.candidateShardsLocal]]) — the whole
-    * shard-level prune costs zero Spark jobs and never materializes a
-    * per-set-bit row. Larger key sets keep the join path (never
-    * collected) with the caller's key pipeline SCOPE-CACHED
-    * ([[graft.CacheScope]]) so its three consumers — stats prune, bloom
-    * prune, final semi-join — evaluate it once, not three times; pass
-    * `maxPushKeys = 0` to skip the size probe entirely when the key
-    * pipeline is known-expensive and known-large. */
+    * one. The collected keys probe the sidecars on the driver
+    * ([[ShardPrune.candidateShardsLocal]], zero Spark jobs). A larger
+    * key set is never collected: the key frame serves two consumers,
+    * the key-frame probe ([[ShardPrune.candidateShards]]) and the final
+    * semi-join. Unless it is a local relation, the key frame is
+    * persisted before the size check and, on this path, its cache joins
+    * the caller's scope ([[graft.CacheScope]]), so the
+    * caller's key pipeline is evaluated once. */
   def readByKey(
       spark: SparkSession,
       path: String,
       schema: StructType,
       keyCol: String,
-      keys: DataFrame,
-      maxPushKeys: Int = 128): DataFrame = {
+      keys: DataFrame): DataFrame = {
     require(schema.fieldNames.contains(keyCol),
       s"key column '$keyCol' not in table schema ${schema.fieldNames.mkString(",")}")
     require(keys.columns.length == 1,
@@ -109,59 +113,45 @@ object ShardReader {
     val t = ShardPublish.table(spark, path)
     val (dir, fs) = (t.dir, t.fs)
     val keyType = schema(keyCol).dataType
-    val rawKeys = keys.select(keys.columns.head).distinct()
-      .withColumnRenamed(keys.columns.head, "__k")
-    // size check FIRST, so a small key set is evaluated exactly ONCE:
+    // a key frame already on the driver (a local relation) costs nothing
+    // to re-read; any other is persisted first, so the caller's pipeline
+    // runs once whichever path the size check picks. The raw frame is
+    // what is kept: neither the key-frame probe nor the semi-join needs
+    // distinct keys
+    val raw = keys.toDF("__k")
+    val cached = !raw.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val keyDf = if (cached) raw.persist() else raw
     // one bounded collect yields (original, cast-to-table-type) pairs —
     // the original literals keep the final filter's semantics identical
-    // to the join path's equality, the cast values feed the LOCAL
-    // sidecar probes (which hash/compare in the table key type, the
-    // r17 cast-collapse discipline). The collect is bounded by the
-    // constant, never the data.
-    val few =
-      if (maxPushKeys <= 0) null
-      else rawKeys
-        .select(org.apache.spark.sql.functions.col("__k"),
-          org.apache.spark.sql.functions.col("__k").cast(keyType).as("__kc"))
-        .limit(maxPushKeys + 1).collect()
-    val small = few != null && few.length <= maxPushKeys
+    // to the join path's equality, the cast values feed the driver probe
+    // (which hashes/compares in the table key type, the cast-collapse
+    // discipline)
+    val few = keyDf.distinct()
+      .select(col("__k"), col("__k").cast(keyType).as("__kc"))
+      .limit(MaxPushKeys + 1).collect()
+    val small = few.length <= MaxPushKeys
+    if (cached) { if (small) keyDf.unpersist() else graft.CacheScope.adopt(keyDf) }
     // _TOMBSTONES before _MANIFEST — see read() for the skew argument
     val tomb = ShardTombstones.readIfExists(fs, dir)
-    def screened(files: Seq[String]): DataFrame = {
-      val base = ShardPayload.read(
-        spark, schema, ShardPayload.of(fs, dir), files)
+    val names = ShardPublish.manifest(t).map(_._1)
+    val (stats, bloom) = (ShardStats.readAll(fs, dir), ShardBloom.readAll(fs, dir))
+    val candidates =
+      if (small) ShardPrune.candidateShardsLocal(stats, bloom, keyType, keyCol,
+        few.map(_.get(1)).filter(_ != null).distinct.toSeq, names)
+      else ShardPrune.candidateShards(spark, stats, bloom, keyType, keyCol,
+        keyDf, names)
+    val lits = few.map(_.get(0)).filter(_ != null) // null never equals
+    if (candidates.isEmpty || lits.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else {
+      val base = ShardPayload.read(spark, schema, ShardPayload.of(fs, dir),
+        candidates.map(n => new Path(dir, n).toString))
       // tombstones directly over the scan: the shard tag derives from
       // input_file_name(), which only resolves below the first exchange
-      tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
-    }
-    val names = ShardPublish.manifest(t).map(_._1)
-    if (small) {
-      val castVals = few.map(_.get(1)).filter(_ != null).distinct.toSeq
-      val candidates = ShardPrune.candidateShardsLocal(
-        fs, dir, keyType, keyCol, castVals, names)
-      val lits = few.map(_.get(0)).filter(_ != null) // null never equals
-      if (candidates.isEmpty || lits.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        val files = candidates.map(n => new Path(dir, n).toString)
-        val df = screened(files)
-        df.filter(df(keyCol).isin(lits.toSeq: _*))
-      }
-    } else {
-      val keyDf = graft.CacheScope.scoped(rawKeys)
-      val candidates = ShardPrune.candidateShards(spark, fs, dir,
-        keyType, keyCol, keyDf, names)
-      if (candidates.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else {
-        val files = candidates.map(n => new Path(dir, n).toString)
-        val df = screened(files)
-        df.join(keyDf,
-          df(keyCol) === org.apache.spark.sql.functions.col("__k"),
-          "left_semi")
-      }
+      val df = tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
+      if (small) df.filter(df(keyCol).isin(lits.toSeq: _*))
+      else df.join(keyDf, df(keyCol) === col("__k"), "left_semi")
     }
   }
 

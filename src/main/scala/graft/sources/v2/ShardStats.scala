@@ -5,9 +5,9 @@ import java.util.Base64
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Per-shard key statistics sidecar (`_STATS`) for [[ShardSink]] tables —
@@ -15,10 +15,11 @@ import org.apache.spark.sql.types._
  * scale: without it, [[ShardDelete.deleteByKey]]/[[ShardDelete.upsertByKey]]
  * discover their hit shards by scanning EVERY manifested shard, so a
  * 5-id takedown on a 100 TB table reads 100 TB. With it, hit discovery
- * is a broadcast range-join of the key set against ≤-file-count shard
- * ranges — zero data files read for shards whose [min,max] cannot
- * contain any key (the Delta/Iceberg min-max skipping shape, re-expressed
- * on the house manifest contract).
+ * tests the key set against the ≤-file-count shard ranges
+ * ([[candidateShardsLocal]], run by [[ShardPrune]]) — zero data files
+ * read for shards whose [min,max] cannot contain any key (the
+ * Delta/Iceberg min-max skipping shape, re-expressed on the house
+ * manifest contract).
  *
  * Format (strict, like [[ShardManifest]] — malformed lines fail at first
  * sight, never laundered forward):
@@ -37,12 +38,15 @@ import org.apache.spark.sql.types._
  * manifested is dead weight, never an error. Both directions degrade to
  * the pre-stats full scan, never to a wrong answer.
  *
- * Ordering contract: min/max are computed executor-side with Spark's own
- * orderings (UTF8String binary compare for strings, IEEE compare with
- * NaN-greatest for doubles) and the prune compares with Spark column
- * expressions against the same values — one ordering on both sides, so a
- * string key never slips between a Java-`compareTo` writer and a
- * UTF8String reader.
+ * Ordering contract: the range test compares keys with Spark SQL's own
+ * orderings — signed integral, UTF8String binary for strings, and
+ * [[SQLOrderingUtil.compareDoubles]] for doubles, under which `-0.0`
+ * equals `0.0` and NaN equals NaN and sorts greatest, exactly as SQL
+ * `=` does. The writer tracks min/max with the same string ordering and
+ * IEEE order for doubles ([[java.lang.Double.compare]]), which only
+ * splits what SQL merges (the two zeros), so every value SQL-equal to a
+ * stored one lies inside the recorded range and a string key never
+ * slips between a Java-`compareTo` writer and a UTF8String reader.
  */
 private[graft] object ShardStats {
 
@@ -156,120 +160,49 @@ private[graft] object ShardStats {
     ShardPublish.writeAtomic(conf, fs, statsPath(dir), serializeAll(sections))
 
   /**
-   * The shard names a keyed operation must READ — the manifest-level
-   * prune. Shards with a stats range that no key can fall into are
-   * skipped without opening a file; shards without a stats entry (or
-   * when stats are absent / keyed on a different column / typed
-   * differently than the table schema says) stay candidates — the safe
-   * fallback direction. All-null-key shards (`-\t-`) can never satisfy
-   * an equality join and are always pruned.
-   *
-   * One pass over the key set against a BROADCAST ≤-file-count range
-   * table; the collect is bounded by the shard count, never the data.
-   */
-  def candidateShards(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame, // one column named __k
-      manifested: Seq[String]): Seq[String] =
-    candidateShards(spark, readIfExists(fs, dir), keyType, keyCol, keys,
-      manifested)
-
-  /**
-   * Driver-local range probe for an ALREADY-BOUNDED key set — the
-   * [[ShardBloom.candidateShardsLocal]] twin for
-   * [[graft.sources.v2.ShardReader.readByKey]]'s small-key path: keys
-   * collected under the `maxPushKeys` bound are compared against the
-   * parsed ranges directly (O(#shards × keys), ZERO Spark jobs) with the
-   * SAME orderings the relational prune's Spark comparisons use — signed
-   * integral, IEEE-with-NaN-greatest ([[java.lang.Double.compare]], what
-   * Spark's ordering is), UTF8String binary — so the two paths cannot
-   * disagree on a hit. `keyVals` are EXTERNAL values already cast to
-   * `keyType`; nulls must be pre-filtered (null never equals). Same hint
-   * contract as the relational form in every degradation direction.
+   * The range test — the ONE implementation, shared by the driver probe
+   * and the key-frame probe ([[ShardPrune]] composes it with the bloom
+   * test). Keeps the shards whose [min,max] can hold one of `keyVals`;
+   * shards without a stats entry (or every shard, when the stats are
+   * absent / keyed on a different column / typed differently than the
+   * table schema says) stay candidates — the safe fallback direction.
+   * All-null-key shards (`-\t-`) can never satisfy an equality and are
+   * always pruned. `keyVals` are already cast to `keyType`, external or
+   * Catalyst-internal (strings as [[String]] or UTF8String); nulls must be
+   * pre-filtered (null never equals). Result order is `manifested`'s.
    */
   def candidateShardsLocal(
       stats: Option[Stats],
       keyType: DataType,
       keyCol: String,
       keyVals: Seq[Any],
-      manifested: Seq[String]): Seq[String] = {
-    val usable = stats
-      .filter(s => s.column == keyCol && dtypeTag(keyType).contains(s.dtype))
-    usable match {
+      manifested: Seq[String]): Seq[String] =
+    stats.filter(s => s.column == keyCol && dtypeTag(keyType).contains(s.dtype)) match {
       case None => manifested
       case Some(s) =>
-        val (withStats, without) = manifested.partition(s.ranges.contains)
-        val hits = withStats.filter { n =>
-          s.ranges(n) match {
-            case None => false // all-null-key shard: never an equality hit
-            case Some((mn, mx)) => s.dtype match {
-              case "long" =>
-                val lo = mn.toLong; val hi = mx.toLong
-                keyVals.exists { v =>
-                  val k = v.asInstanceOf[Number].longValue
-                  k >= lo && k <= hi
-                }
-              case "double" =>
-                val lo = mn.toDouble; val hi = mx.toDouble
-                keyVals.exists { v =>
-                  val k = v.asInstanceOf[Number].doubleValue
-                  java.lang.Double.compare(k, lo) >= 0 &&
-                    java.lang.Double.compare(k, hi) <= 0
-                }
-              case _ =>
-                val lo = org.apache.spark.unsafe.types.UTF8String.fromString(mn)
-                val hi = org.apache.spark.unsafe.types.UTF8String.fromString(mx)
-                keyVals.exists { v =>
-                  val k = org.apache.spark.unsafe.types.UTF8String
-                    .fromString(v.toString)
-                  k.compareTo(lo) >= 0 && k.compareTo(hi) <= 0
-                }
-            }
-          }
+        val ks = keyVals.map(ShardRowReader.toComparable(_, keyType))
+        val inRange: (String, String) => Boolean = s.dtype match {
+          case "long" =>
+            val ls = ks.map(_.asInstanceOf[Number].longValue)
+            (mn, mx) => { val lo = mn.toLong; val hi = mx.toLong
+              ls.exists(k => k >= lo && k <= hi) }
+          case "double" =>
+            val ds = ks.map(_.asInstanceOf[Number].doubleValue)
+            (mn, mx) => { val lo = mn.toDouble; val hi = mx.toDouble
+              ds.exists(k => SQLOrderingUtil.compareDoubles(k, lo) >= 0 &&
+                SQLOrderingUtil.compareDoubles(k, hi) <= 0) }
+          case _ =>
+            val us = ks.map(_.asInstanceOf[UTF8String])
+            (mn, mx) => {
+              val lo = UTF8String.fromString(mn); val hi = UTF8String.fromString(mx)
+              us.exists(k => k.compareTo(lo) >= 0 && k.compareTo(hi) <= 0) }
         }
-        hits ++ without
+        manifested.filter(n => s.ranges.get(n) match {
+          case None => true              // no stats entry: always a candidate
+          case Some(None) => false       // all-null-key shard: never a hit
+          case Some(Some((mn, mx))) => inRange(mn, mx)
+        })
     }
-  }
-
-  /** Same prune over PRE-PARSED stats — mutators that already read the
-    * sidecar (one read per operation, not one per consumer: each
-    * readIfExists is a metadata round trip on an object store). */
-  def candidateShards(
-      spark: SparkSession,
-      stats: Option[Stats],
-      keyType: DataType,
-      keyCol: String,
-      keys: DataFrame,
-      manifested: Seq[String]): Seq[String] = {
-    val usable = stats
-      .filter(s => s.column == keyCol && dtypeTag(keyType).contains(s.dtype))
-    usable match {
-      case None => manifested
-      case Some(s) =>
-        val (withStats, without) = manifested.partition(s.ranges.contains)
-        val ranged = withStats.flatMap(n =>
-          s.ranges(n).map { case (mn, mx) => (n, mn, mx) })
-        if (ranged.isEmpty) without
-        else {
-          import spark.implicits._
-          val rangesDf = ranged.toDF("__shard", "__min", "__max")
-            .select(col("__shard"),
-              col("__min").cast(keyType).as("__min"),
-              col("__max").cast(keyType).as("__max"))
-          val hit = keys
-            .select(col("__k").cast(keyType).as("__k"))
-            .join(broadcast(rangesDf),
-              col("__k") >= col("__min") && col("__k") <= col("__max"))
-            .select(col("__shard")).distinct()
-            .collect().map(_.getString(0)).toSeq // ≤ shard count
-          hit ++ without
-        }
-    }
-  }
 }
 
 /**

@@ -11,8 +11,8 @@ import graft.SparkSpec
  * where min/max ranges prune nothing because every shard spans the whole
  * domain. Verified by the house physical-impossibility argument
  * (non-candidate shards REMOVED from disk, the op succeeds iff pruned),
- * plus: writer/prober hashing parity over every supported type, strict
- * sidecar parsing, hint-only degradation in every direction (absent
+ * plus: float normalization in the one hashing implementation, driver
+ * and key-frame probes agreeing shard-for-shard, strict sidecar parsing, hint-only degradation in every direction (absent
  * entry, saturated filter, bloom-less append on a bloom table), and
  * survival through the copy-on-write maintenance suite.
  */
@@ -44,39 +44,23 @@ class ShardBloomSpec extends SparkSpec {
     ShardBloom.readIfExists(fs, p).get
   }
 
-  test("writer-side hashing == xxhash64 column positions, every supported type") {
-    // the contract that makes the prune safe: ShardBloomTracker's bit
-    // positions and positionsCol's must be the SAME function. Drift here
-    // = silently wrong deletes, so every type gets a paranoid fixture
-    // (unicode strings, -0.0/NaN doubles, negative ints).
-    def check[T](values: Seq[T], dt: DataType, enc: org.apache.spark.sql.Encoder[T],
-        toInternal: T => Any): Unit = {
-      val m = 8192
-      val df = spark.createDataset(values)(enc).toDF("__k")
-      val colPos = df.select(array(
-        ShardBloom.positionsCol(col("__k").cast(dt), dt, m): _*).as("p"))
-        .collect().map(_.getSeq[Long](0).map(_.toInt))
-      values.zip(colPos).foreach { case (v, ps) =>
-        val h1 = ShardBloom.hash1(toInternal(v), dt)
-        assert(ShardBloom.positions(h1, m).toSeq == ps.toSeq,
-          s"position drift for $v ($dt): writer=" +
-            s"${ShardBloom.positions(h1, m).toSeq} column=$ps")
-      }
-    }
-    check(Seq("a", "机器学习", "İstanbul", "", "x" * 100), StringType,
-      org.apache.spark.sql.Encoders.STRING,
-      (s: String) => org.apache.spark.unsafe.types.UTF8String.fromString(s))
-    check(Seq(0L, -1L, Long.MaxValue, Long.MinValue, 42L), LongType,
-      org.apache.spark.sql.Encoders.scalaLong, (v: Long) => java.lang.Long.valueOf(v))
-    check(Seq(0, -7, Int.MaxValue), IntegerType,
-      org.apache.spark.sql.Encoders.scalaInt, (v: Int) => java.lang.Integer.valueOf(v))
-    check(Seq(0.0d, -0.0d, 1.5d, Double.NaN, -3.25e18), DoubleType,
-      org.apache.spark.sql.Encoders.scalaDouble, (v: Double) => java.lang.Double.valueOf(v))
-    // -0.0 and 0.0 must land on the SAME positions (join equality)
-    assert(ShardBloom.positions(ShardBloom.hash1(
-      java.lang.Double.valueOf(-0.0d), DoubleType), 8192).toSeq ==
-      ShardBloom.positions(ShardBloom.hash1(
-        java.lang.Double.valueOf(0.0d), DoubleType), 8192).toSeq)
+  test("writer hashing normalizes floats: -0.0/0.0 and every NaN share bloom positions") {
+    // the bloom test hashes with the writer's own hash1/positions, so the
+    // only contract left to pin is the float normalization that makes a
+    // bloom answer agree with SQL equality (-0.0 = 0.0, NaN = NaN)
+    def pos(v: Any, dt: DataType): Seq[Int] =
+      ShardBloom.positions(ShardBloom.hash1(v, dt), 8192).toSeq
+    assert(pos(java.lang.Double.valueOf(-0.0d), DoubleType) ==
+      pos(java.lang.Double.valueOf(0.0d), DoubleType))
+    assert(pos(java.lang.Float.valueOf(-0.0f), FloatType) ==
+      pos(java.lang.Float.valueOf(0.0f), FloatType))
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    assert(otherNaN.isNaN)
+    assert(pos(java.lang.Double.valueOf(otherNaN), DoubleType) ==
+      pos(java.lang.Double.valueOf(Double.NaN), DoubleType))
+    // distinct values still hash apart
+    assert(pos(java.lang.Double.valueOf(1.5d), DoubleType) !=
+      pos(java.lang.Double.valueOf(0.0d), DoubleType))
   }
 
   test("digest-keyed prune: candidates shrink to the hit shards; physical impossibility") {
@@ -317,22 +301,9 @@ class ShardBloomSpec extends SparkSpec {
       spark, dir, both, "doc_id", Seq(9999L).toDF("k")).isEmpty)
   }
 
-  test("local probe == relational prune, and the local path runs ZERO Spark jobs") {
-    // string digests (bloom) AND long ids (stats + bloom): the two paths
-    // must agree shard-for-shard, and the local one must never submit a
-    // job — the r17 relational prune cost O(#shards × mBits) driver rows
-    // plus a Spark join for a 3-key lookup; the local probe is the fix
-    val dirS = java.nio.file.Files.createTempDirectory("graft-bloom-locS").toString
-    (0 until 8).foreach(s =>
-      append(dirS, (s * 50 until (s + 1) * 50).map(i => row(i.toLong))))
-    val (fsS, pS) = fsDir(dirS)
-    val namesS = scala.io.Source.fromFile(s"$dirS/_MANIFEST").getLines()
-      .filter(_.nonEmpty).map(_.split("\t")(0)).toSeq
-    val keysS = Seq(row(60L)._1, row(310L)._1,
-      org.apache.commons.codec.digest.DigestUtils.md5Hex("never-written"))
-    val rel = ShardPrune.candidateShards(spark, fsS, pS, StringType, "digest",
-      keysS.toDF("__k"), namesS)
-
+  /** Spark jobs `body` submits (the listener bus is async: a short
+    * wait lets every posted job-start event arrive). */
+  private def jobsOf[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -340,14 +311,35 @@ class ShardBloomSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    val loc = try {
-      val r = ShardPrune.candidateShardsLocal(
-        fsS, pS, StringType, "digest", keysS, namesS)
-      Thread.sleep(500) // listener bus is async; no-submission means no event
-      r
+    try {
+      val r = body
+      Thread.sleep(500)
+      (r, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(loc.toSet == rel.toSet, s"local=$loc relational=$rel")
-    assert(jobs.get() == 0, s"local probe submitted ${jobs.get()} Spark jobs")
+  }
+
+  test("key-frame probe == driver probe; the driver probe runs zero Spark jobs, the key-frame probe one") {
+    // string digests (bloom) AND long ids (stats + bloom): the probe run
+    // per key-frame partition must agree shard-for-shard with the probe
+    // of the same keys on the driver
+    val dirS = java.nio.file.Files.createTempDirectory("graft-bloom-locS").toString
+    (0 until 8).foreach(s =>
+      append(dirS, (s * 50 until (s + 1) * 50).map(i => row(i.toLong))))
+    val (fsS, pS) = fsDir(dirS)
+    val (statsS, bloomS) = (ShardStats.readAll(fsS, pS), ShardBloom.readAll(fsS, pS))
+    val namesS = scala.io.Source.fromFile(s"$dirS/_MANIFEST").getLines()
+      .filter(_.nonEmpty).map(_.split("\t")(0)).toSeq
+    val keysS = Seq(row(60L)._1, row(310L)._1,
+      org.apache.commons.codec.digest.DigestUtils.md5Hex("never-written"))
+    val keyFrameS = keysS.toDF("__k")
+    val (loc, locJobs) = jobsOf(ShardPrune.candidateShardsLocal(
+      statsS, bloomS, StringType, "digest", keysS, namesS))
+    val (frame, frameJobs) = jobsOf(ShardPrune.candidateShards(
+      spark, statsS, bloomS, StringType, "digest", keyFrameS, namesS))
+    assert(loc == frame, s"driver=$loc key-frame=$frame")
+    assert(loc.nonEmpty && loc.size <= 3, s"bloom did not prune: $loc")
+    assert(locJobs == 0, s"driver probe submitted $locJobs Spark jobs")
+    assert(frameJobs == 1, s"key-frame probe submitted $frameJobs Spark jobs")
 
     // long keys through stats + bloom intersection — same agreement
     val dirL = java.nio.file.Files.createTempDirectory("graft-bloom-locL").toString
@@ -361,23 +353,24 @@ class ShardBloomSpec extends SparkSpec {
     appendBoth((1L until 100L by 2).map(i => (i, s"odd $i")))
     appendBoth((1000L until 1050L).map(i => (i, s"far $i")))
     val (fsL, pL) = fsDir(dirL)
+    val (statsL, bloomL) = (ShardStats.readAll(fsL, pL), ShardBloom.readAll(fsL, pL))
     val namesL = scala.io.Source.fromFile(s"$dirL/_MANIFEST").getLines()
       .filter(_.nonEmpty).map(_.split("\t")(0)).toSeq
-    val keysL: Seq[Any] = Seq(42L, 9999L)
-    val relL = ShardPrune.candidateShards(spark, fsL, pL, LongType, "doc_id",
-      Seq(42L, 9999L).toDF("__k"), namesL)
-    val locL = ShardPrune.candidateShardsLocal(
-      fsL, pL, LongType, "doc_id", keysL, namesL)
-    assert(locL.toSet == relL.toSet && locL.size == 1)
+    val keyFrameL = Seq(42L, 9999L).toDF("__k")
+    val (locL, locLJobs) = jobsOf(ShardPrune.candidateShardsLocal(
+      statsL, bloomL, LongType, "doc_id", Seq(42L, 9999L), namesL))
+    val (frameL, frameLJobs) = jobsOf(ShardPrune.candidateShards(
+      spark, statsL, bloomL, LongType, "doc_id", keyFrameL, namesL))
+    assert(locL == frameL && locL.size == 1, s"driver=$locL key-frame=$frameL")
+    assert(locLJobs == 0 && frameLJobs == 1, s"jobs: $locLJobs / $frameLJobs")
   }
 
-  test("relational explode is volume-capped: over-budget shards stay candidates, hits never lost") {
+  test("dense sidecar: the probe keeps the hit shard and prunes a half-dense filter without the key") {
     // Synthetic sidecar: shardA's filter is sparse and CONTAINS the key
-    // (must stay a hit); shardB is half-dense (passes the density
-    // cutoff) but its popcount exceeds what is left of the absolute
-    // set-bit budget — it must become a CANDIDATE, not be exploded into
-    // ~4M driver rows, and never be pruned; shardC is sparse without
-    // the key and fits the remaining budget — genuinely pruned.
+    // (must stay a hit); shardB is half-dense but lacks the key's bits;
+    // shardC is sparse without the key. Probing a dense filter costs k
+    // bit tests like any other, so both B and C are pruned — by the
+    // driver probe and by the key-frame probe alike.
     val m = 1 << 23
     val key = "capped-key"
     val pos = ShardBloom.positions(ShardBloom.hash1(
@@ -392,16 +385,12 @@ class ShardBloomSpec extends SparkSpec {
     ShardBloom.setBit(cBytes, (pos(0) + 1) % m) // one stray bit, no key
     val bloom = ShardBloom.Bloom("k", "string", m, ShardBloom.KHashes,
       Map("A" -> Some(aBytes), "B" -> Some(bBytes), "C" -> Some(cBytes)))
-    // popcount(A)=4 fits; popcount(B)=2^22-4 > budget-4 → candidate;
-    // popcount(C)=1 fits the remainder → exploded and pruned
-    import spark.implicits._
-    val cands = ShardBloom.candidateShards(spark, Some(bloom), StringType,
-      "k", Seq(key).toDF("__k"), Seq("A", "B", "C"))
-    assert(cands.toSet == Set("A", "B"), s"got $cands")
-    // the local probe needs no cap at all and prunes B exactly
-    val local = ShardBloom.candidateShardsLocal(Some(bloom), StringType,
+    val local = ShardPrune.candidateShardsLocal(Nil, Seq(bloom), StringType,
       "k", Seq(key), Seq("A", "B", "C"))
     assert(local == Seq("A"), s"got $local")
+    val frame = ShardPrune.candidateShards(spark, Nil, Seq(bloom), StringType,
+      "k", Seq(key).toDF("__k"), Seq("A", "B", "C"))
+    assert(frame == Seq("A"), s"got $frame")
   }
 
   test("multi-column sidecars: one table prunes on id ranges AND digest blooms; mutators keep every section") {
@@ -454,9 +443,10 @@ class ShardBloomSpec extends SparkSpec {
   }
 
   test("readByKey large-key path evaluates the caller's key pipeline exactly once") {
-    // maxPushKeys=0 forces the join path with stats AND bloom prunes
-    // live — three relational consumers of the key frame. Scope-caching
-    // must make the (possibly expensive) caller pipeline run once: the
+    // 200 distinct keys (over the 128-key push bound) take the join path
+    // with stats AND bloom prunes live: the size probe, the key-frame
+    // probe and the final semi-join all read the key frame. Caching must
+    // make the (possibly expensive) caller pipeline run once: the
     // accumulator counts UDF invocations, one per key row.
     val dir = java.nio.file.Files.createTempDirectory("graft-read-once").toString
     (0 until 4).foreach { s =>
@@ -472,8 +462,8 @@ class ShardBloomSpec extends SparkSpec {
     val acc = spark.sparkContext.longAccumulator("keyPipelineEvals")
     val counted = udf((x: Long) => { acc.add(1L); x })
     val keys = spark.range(0L, 200L).select(counted(col("id")).as("k"))
-    val out = ShardReader.readByKey(spark, dir, tbl, "doc_id", keys,
-      maxPushKeys = 0)
+    val out = ShardReader.readByKey(spark, dir, tbl, "doc_id", keys)
+    assert(!out.queryExecution.executedPlan.toString.contains("In(doc_id"))
     assert(out.count() == 200L)
     assert(acc.value == 200L,
       s"key pipeline ran ${acc.value / 200.0}× (want exactly 1×)")

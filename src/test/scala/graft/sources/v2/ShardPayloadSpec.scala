@@ -120,16 +120,20 @@ class ShardPayloadSpec extends SparkSpec {
     assert(plan.contains("PushedFilters: [In(doc_id"),
       s"IN-list did not reach the scan:\n$plan")
     assert(pushed.select("doc_id").as[Long].collect().toSet == Set(3L, 7L))
-    // a key set over the threshold keeps the join path, same answer
-    val manyKeys = (1L to 60L).toDF("k")
+    // a key set over the 128-key push bound keeps the join path; the
+    // pushed path over the keys that exist gives the same answer
     val joined = ShardReader.readByKey(
-      spark, dir, schema, "doc_id", manyKeys, maxPushKeys = 10)
+      spark, dir, schema, "doc_id", (1L to 200L).toDF("k"))
     assert(!joined.queryExecution.executedPlan.toString
       .contains("PushedFilters: [In(doc_id"))
-    assert(joined.count() == 60L)
+    assert(joined.count() == 100L)
+    val pushedAll = ShardReader.readByKey(
+      spark, dir, schema, "doc_id", (1L to 100L).toDF("k"))
+    assert(pushedAll.queryExecution.executedPlan.toString
+      .contains("PushedFilters: [In(doc_id"))
     assert(joined.select("doc_id").as[Long].collect().toSet ==
-      ShardReader.readByKey(spark, dir, schema, "doc_id", manyKeys)
-        .select("doc_id").as[Long].collect().toSet)
+      pushedAll.select("doc_id").as[Long].collect().toSet)
+    graft.CacheScope.releaseAll()
     // an all-null key set matches nothing (IN semantics = join equality)
     assert(ShardReader.readByKey(spark, dir, schema, "doc_id",
       Seq(null.asInstanceOf[java.lang.Long]).toDF("k")).count() == 0L)

@@ -325,6 +325,51 @@ class ShardStatsSpec extends SparkSpec {
     assert(e2.getMessage.contains("malformed schema header"), e2.getMessage)
   }
 
+  test("double keys prune under SQL equality: -0.0 finds 0.0 and 0.0 finds -0.0 on every keyed path") {
+    // the range test's compare is Spark SQL's: -0.0 = 0.0, NaN = NaN and
+    // sorts greatest — a plain IEEE compare misses both zero directions
+    val ranges = ShardStats.Stats("w", "double", Map(
+      "pos" -> Some(("0.0", "1.0")), "neg" -> Some(("-0.0", "-0.0")),
+      "nan" -> Some(("2.0", "NaN"))))
+    def probe(k: Double): Set[String] = ShardStats.candidateShardsLocal(
+      Some(ranges), org.apache.spark.sql.types.DoubleType, "w", Seq(k),
+      Seq("pos", "neg", "nan")).toSet
+    assert(probe(-0.0) == Set("pos", "neg"))
+    assert(probe(0.0) == Set("pos", "neg"))
+    assert(probe(Double.NaN) == Set("nan"))
+
+    val dschema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("w", org.apache.spark.sql.types.DoubleType)))
+    Seq(-0.0, 0.0).foreach { k =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-stats-zero").toString
+      def dappend(rows: Seq[(Long, Double)]): Unit =
+        rows.toDF("doc_id", "w").coalesce(1)
+          .write.format("graft.sources.v2.ShardSink")
+          .option("path", dir).option("statsColumn", "w")
+          .mode("append").save()
+      dappend(Seq((1L, 0.0), (2L, 1.0)))  // range [0.0, 1.0]
+      dappend(Seq((3L, -0.0)))            // range [-0.0, -0.0]
+      val zeros = Set(1L, 3L) // SQL: -0.0 = 0.0
+      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+        df.select("doc_id").as[Long].collect().toSet
+      // small key set: the driver probe
+      assert(ids(ShardReader.readByKey(spark, dir, dschema, "w",
+        Seq(k).toDF("k"))) == zeros, s"small path, key $k")
+      // over the push bound: the key-frame probe
+      val many = (k +: (1000 until 1200).map(_.toDouble)).toDF("k")
+      assert(ids(ShardReader.readByKey(spark, dir, dschema, "w", many)) ==
+        zeros, s"key-frame path, key $k")
+      graft.CacheScope.releaseAll()
+      // the V2 scan's plan-time prune
+      val v2 = spark.read.format("graft.sources.v2.ShardSink").load(dir)
+      assert(ids(v2.filter(col("w") === lit(k))) == zeros, s"V2 scan, key $k")
+      assert(ShardDelete.deleteByKey(spark, dir, dschema, "w",
+        Seq(k).toDF("k")) == 2L, s"deleteByKey, key $k")
+      assert(ids(ShardReader.read(spark, dir, dschema)) == Set(2L))
+    }
+  }
+
   test("append commit takes the lock: concurrent maintenance cannot interleave; live holder survives its lease (heartbeat)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-lock-append").toString
     append(dir, Seq((1L, "a")))

@@ -66,7 +66,7 @@ class ShardTombstonesSpec extends SparkSpec {
       Seq(10L, 11L).toDF("k")).select("doc_id").as[Long].collect().toSet ==
       Set(11L)) // small (pushed) path
     assert(ShardReader.readByKey(spark, dir, schema, "doc_id",
-      Seq(10L, 11L).toDF("k"), maxPushKeys = 0)
+      (Seq(10L, 11L) ++ (100000L until 100200L)).toDF("k"))
       .select("doc_id").as[Long].collect().toSet == Set(11L)) // join path
     graft.CacheScope.releaseAll()
     // manifest row count becomes an upper bound while tombstones live
