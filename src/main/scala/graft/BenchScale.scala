@@ -289,6 +289,23 @@ object BenchScale {
     // so manifest paging lands when measured, not when felt
     "shard_metadata_plane" -> "stage")
 
+  /** The read stage of a keyed delete: candidate pruning, then the
+    * candidates' rows through the shard store's one relational scan
+    * (payload format and live tombstones included), per-shard hit
+    * counts of `keys` (a one-column frame named `keyCol`). */
+  private def hitScan(spark: SparkSession, table: String,
+      schema: org.apache.spark.sql.types.StructType, keyCol: String,
+      keys: DataFrame): DataFrame = {
+    import graft.sources.v2.{ShardDelete, ShardDir, ShardReader, ShardTombstones}
+    val t = ShardDir(table, spark.sessionState.newHadoopConf())
+    val cands = ShardDelete.candidateShards(spark, table, schema, keyCol, keys)
+    val tagged = ShardReader.scan(spark, t, schema, cands,
+      ShardTombstones.readIfExists(t.fs, t.dir), keepShard = true)
+    tagged.join(keys.withColumnRenamed(keyCol, "__k"),
+        tagged(keyCol) === col("__k"), "left_semi")
+      .groupBy(col("__shard")).agg(count(lit(1)).as("n"))
+  }
+
   /**
    * Probe-only stage surfaces (not in [[SparkEntry.queries]] — they
    * verify SCALING of one stage, with the value semantics owned by the
@@ -322,20 +339,7 @@ object BenchScale {
       }
       val keys = spark.range(0, 1000).select(col("id").as("doc_id"))
         .filter(col("doc_id") % 11 === 3)
-      val cands = graft.sources.v2.ShardDelete.candidateShards(
-        spark, table, schema, "doc_id", keys)
-      if (cands.isEmpty) {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("shard", "n")
-      } else {
-        val files = cands.map(n => s"$table/$n")
-        val tagged = spark.read.schema(schema).json(files: _*)
-          .withColumn("__shard",
-            element_at(split(input_file_name(), "/"), -1))
-        tagged.join(keys.withColumnRenamed("doc_id", "__k"),
-            tagged("doc_id") === col("__k"), "left_semi")
-          .groupBy(col("__shard")).agg(count(lit(1)).as("n"))
-      }
+      hitScan(spark, table, schema, "doc_id", keys)
     }),
     // the digest-keyed twin of shard_keyed_discovery: the table is keyed
     // by md5(text) (uniform — ranges prune nothing) and carries the
@@ -370,20 +374,7 @@ object BenchScale {
       // — copy 0 is unremapped), derived from the corpus, never the table
       val keys = spark.read.parquet(s"$dir/documents.parquet")
         .orderBy(col("doc_id")).limit(5).select(md5(col("text")).as("ld"))
-      val cands = graft.sources.v2.ShardDelete.candidateShards(
-        spark, table, schema, "ld", keys)
-      if (cands.isEmpty) {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("shard", "n")
-      } else {
-        val files = cands.map(n => s"$table/$n")
-        val tagged = spark.read.schema(schema).json(files: _*)
-          .withColumn("__shard",
-            element_at(split(input_file_name(), "/"), -1))
-        tagged.join(keys.withColumnRenamed("ld", "__k"),
-            tagged("ld") === col("__k"), "left_semi")
-          .groupBy(col("__shard")).agg(count(lit(1)).as("n"))
-      }
+      hitScan(spark, table, schema, "ld", keys)
     }),
     // the merge-on-read takedown stage: a FIXED 5-key deferred delete +
     // one pruned serve on a table whose size (and shard count) tracks

@@ -32,7 +32,4 @@ trait QueryFamily {
   protected val D: DecimalType = DecimalType(12, 2)
   protected def dec(c: Column): Column = c.cast(D)
   protected def sumd(c: Column): Column = sum(dec(c)).cast(DoubleType)
-  /** SQL twin of sumd */
-  protected def sqlSumd(col: String): String =
-    s"CAST(SUM(CAST($col AS DECIMAL(12,2))) AS DOUBLE)"
 }

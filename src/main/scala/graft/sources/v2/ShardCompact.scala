@@ -55,8 +55,7 @@ object ShardCompact {
       s"sortBy column '$c' not in table schema ${schema.fieldNames.mkString(",")}"))
     ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
     val (dir, fs) = (t.dir, t.fs)
-    val tableSchema = ShardSchema.readIfExists(fs, dir)
-    ShardSchema.requireCovers(tableSchema, dir, schema, "compact")
+    ShardSchema.requireCovers(t.schemaSidecar, dir, schema, "compact")
     // live merge-on-read tombstones force the rewrite even on an
     // already-compact table: compaction IS their materialization step
     // ([[ShardTombstones]]) — early-returning would leave a 1-shard
@@ -84,8 +83,7 @@ object ShardCompact {
         in.coalesce(1).sortWithinPartitions(org.apache.spark.sql.functions.col(c))
       case None => in.repartition(targetShards)
     }
-    ShardPublish.writeScratch(shaped, scratch, tableStats, tableBloom,
-      tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl))
+    ShardPublish.writeScratch(shaped, scratch, tableStats, tableBloom, t.format)
     ShardPublish.switchCopyOnWrite(t, old, old.map(_._1).toSet,
       scratch, tableStats, tableBloom, tombs).size
     }

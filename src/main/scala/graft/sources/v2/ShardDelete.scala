@@ -89,10 +89,9 @@ object ShardDelete {
     // ONE read per sidecar per operation (each readIfExists is a
     // metadata round trip on an object store), threaded to every
     // consumer below
-    val tableSchema = ShardSchema.readIfExists(fs, dir)
     val tableStats = ShardStats.readAll(fs, dir)
     val tableBloom = ShardBloom.readAll(fs, dir)
-    ShardSchema.requireCovers(tableSchema, dir, schema, "deleteByKey")
+    ShardSchema.requireCovers(t.schemaSidecar, dir, schema, "deleteByKey")
     if (old.isEmpty) return 0L
 
     val rawKeys = keys.toDF("__k")
@@ -103,16 +102,12 @@ object ShardDelete {
     val candidates = ShardPrune.candidateShards(spark, tableStats, tableBloom,
       schema(keyCol).dataType, keyCol, rawKeys, old.map(_._1))
     if (candidates.isEmpty) return 0L
-    val files = candidates.map(n => new Path(dir, n).toString)
-    val fmtD = tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl)
     val tombs = ShardTombstones.readIfExists(fs, dir)
-    val tagged0 = ShardPayload.read(spark, schema, fmtD, files)
-      .withColumn("__shard", element_at(split(input_file_name(), "/"), -1))
     // live merge-on-read tombstones apply BEFORE hit counting: rows a
     // deferred delete already removed logically must neither count as
     // deleted here nor be resurrected by the rewrite
-    val tagged = tombs.fold(tagged0)(ts =>
-      ShardTombstones.minus(spark, dir, tagged0, ts, Some("__shard")))
+    val tagged = ShardReader.scan(spark, t, schema, candidates, tombs,
+      keepShard = true)
 
     // ONE pass over the CANDIDATES finds the hit shards and their
     // per-shard match counts — ≤ shard-count rows on the driver, bounded
@@ -133,7 +128,7 @@ object ShardDelete {
       tagged.filter(col("__shard").isin(hitCounts.keys.toSeq: _*))
         .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
         .drop("__shard"),
-      scratch, tableStats, tableBloom, fmtD)
+      scratch, tableStats, tableBloom, t.format)
     ShardPublish.switchCopyOnWrite(t, old, hitCounts.keySet, scratch,
       tableStats, tableBloom, tombs)
     deleted
@@ -178,8 +173,7 @@ object ShardDelete {
       s"keys must be a one-column frame, got ${keys.columns.mkString(",")}")
     ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
     val (dir, fs) = (t.dir, t.fs)
-    ShardSchema.requireCovers(
-      ShardSchema.readIfExists(fs, dir), dir, schema, "deleteByKeyDeferred")
+    ShardSchema.requireCovers(t.schemaSidecar, dir, schema, "deleteByKeyDeferred")
     if (old.isEmpty) return 0L
     val keyType = schema(keyCol).dataType
     val tag = ShardSchema.tagOf(keyType)
@@ -239,10 +233,9 @@ object ShardDelete {
         s" in order, got ${updates.columns.mkString(",")}")
     ShardPublish.locked(spark, path, leaseMs) { (t, old) =>
     val (dir, fs) = (t.dir, t.fs)
-    val tableSchema = ShardSchema.readIfExists(fs, dir)
     val tableStats = ShardStats.readAll(fs, dir)
     val tableBloom = ShardBloom.readAll(fs, dir)
-    ShardSchema.requireCovers(tableSchema, dir, schema, "upsertByKey")
+    ShardSchema.requireCovers(t.schemaSidecar, dir, schema, "upsertByKey")
 
     // updates feed four consumers (uniqueness gate, count, hit scan,
     // write) — scope-cached so the caller's plan runs once
@@ -267,24 +260,17 @@ object ShardDelete {
     // out of the same action
     val candidates = ShardPrune.candidateShards(spark, tableStats, tableBloom,
       schema(keyCol).dataType, keyCol, keyDf, old.map(_._1))
-    val files = candidates.map(n => new Path(dir, n).toString)
-    val fmtU = tableSchema.map(_.format).getOrElse(ShardPayload.Jsonl)
     val tombsU = ShardTombstones.readIfExists(fs, dir)
-    val tagged = if (files.isEmpty) null
-      else {
-        val t0 = ShardPayload.read(spark, schema, fmtU, files)
-          .withColumn("__shard", element_at(split(input_file_name(), "/"), -1))
-        // tombstones apply before hit counting (deleteByKey's rationale);
-        // the upsert's own NEW rows land in fresh shards outside every
-        // segment's scope, so re-inserting a tombstoned key just works
-        tombsU.fold(t0)(ts =>
-          ShardTombstones.minus(spark, dir, t0, ts, Some("__shard")))
-      }
+    // tombstones apply before hit counting (deleteByKey's rationale);
+    // the upsert's own NEW rows land in fresh shards outside every
+    // segment's scope, so re-inserting a tombstoned key just works
+    val tagged = if (candidates.isEmpty) null
+      else ShardReader.scan(spark, t, schema, candidates, tombsU, keepShard = true)
     // per-shard hit counts AND the global matched-key count in ONE
     // rollup action (r19): the grand-total row carries the global
     // countDistinct, the per-shard rows the counts — replacing two
     // actions over a scope-cached hit set with one uncached pass
-    val hitAgg = if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
+    val hitAgg = if (candidates.isEmpty) Array.empty[org.apache.spark.sql.Row]
       else tagged.join(keyDf, tagged(keyCol) === col("__k"), "left_semi")
         .select(col("__shard"), col(keyCol).as("__key"))
         .rollup(col("__shard"))
@@ -305,7 +291,7 @@ object ShardDelete {
         .join(keyDf, tagged(keyCol) === col("__k"), "left_anti")
         .drop("__shard")
         .unionByName(up)
-    ShardPublish.writeScratch(rows, scratch, tableStats, tableBloom, fmtU)
+    ShardPublish.writeScratch(rows, scratch, tableStats, tableBloom, t.format)
     ShardPublish.switchCopyOnWrite(t, old, hitCounts.keySet, scratch,
       tableStats, tableBloom, tombsU)
     (replaced, nUpdates - matchedKeys)

@@ -11,7 +11,6 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
@@ -78,19 +77,10 @@ private[graft] object ShardPayload {
 
   /** The table's payload format: the `_SCHEMA` pin, jsonl when the
     * table predates `_SCHEMA` or the pin (every pre-r17 table). */
-  def of(fs: FileSystem, dir: Path): String =
-    ShardSchema.readIfExists(fs, dir).map(_.format).getOrElse(Jsonl)
+  def of(fs: FileSystem, dir: Path): String = of(ShardSchema.readIfExists(fs, dir))
 
-  /** Read shard files of a known format with the table schema. */
-  def read(spark: SparkSession, schema: StructType, fmt: String,
-      files: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else fmt match {
-      case Parquet => spark.read.schema(schema).parquet(files: _*)
-      case _ => spark.read.schema(schema).json(files: _*)
-    }
+  def of(sidecar: Option[ShardSchema.TableSchema]): String =
+    sidecar.map(_.format).getOrElse(Jsonl)
 
   /** One shard file's writer — the task-side strategy behind
     * [[ShardDataWriter]]. */
@@ -134,7 +124,7 @@ private[graft] object ShardPayload {
   /** Parquet message type for the sink's flat-primitive schema: every
     * field optional (the sink's columns are nullable by evolution),
     * sub-int integrals annotated so the Spark type round-trips. */
-  private[v2] def messageType(schema: StructType): MessageType = {
+  private def messageType(schema: StructType): MessageType = {
     val b = Types.buildMessage()
     schema.fields.foreach { f =>
       val t: Type = f.dataType match {

@@ -7,11 +7,15 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One operation's handle on a [[ShardSink]] table directory: ONE Hadoop
-  * configuration and filesystem for the whole operation. */
-private[v2] final case class ShardDir(path: String, conf: Configuration) {
+  * configuration and filesystem for the whole operation, and ONE read of
+  * its `_SCHEMA` sidecar, on first use. */
+private[graft] final case class ShardDir(path: String, conf: Configuration) {
   val dir = new Path(path)
   val fs: FileSystem = dir.getFileSystem(conf)
   val mfPath = new Path(dir, ShardManifest.FileName)
+  lazy val schemaSidecar: Option[ShardSchema.TableSchema] =
+    ShardSchema.readIfExists(fs, dir)
+  def format: String = ShardPayload.of(schemaSidecar)
 }
 
 /**
@@ -55,13 +59,33 @@ private[v2] object ShardPublish {
       .rename(tmp, path, Options.Rename.OVERWRITE)
   }
 
+  /** The table's published `_MANIFEST`, None when nothing was ever
+    * committed under it. */
+  def manifestIfExists(t: ShardDir): Option[Seq[(String, Long)]] =
+    readTextIfExists(t.fs, t.mfPath).map(ShardManifest.parse(_, t.mfPath))
+
   /** The table's published `_MANIFEST`; fails when nothing was ever
     * committed under it. */
-  def manifest(t: ShardDir): Seq[(String, Long)] = {
-    val text = readTextIfExists(t.fs, t.mfPath)
-    require(text.isDefined,
-      s"no ${ShardManifest.FileName} under ${t.path} — nothing committed there")
-    ShardManifest.parse(text.get, t.mfPath)
+  def manifest(t: ShardDir): Seq[(String, Long)] = committed(t, manifestIfExists(t))
+
+  /** `mf`, a manifest read of `t`; fails when it found none. */
+  def committed(t: ShardDir, mf: Option[Seq[(String, Long)]]): Seq[(String, Long)] =
+    mf.getOrElse(throw new IllegalArgumentException(
+      s"no ${ShardManifest.FileName} under ${t.path} — nothing committed there"))
+
+  /** A live read's metadata: the tombstones, then the manifest. The two
+    * reads are not atomic, so `_TOMBSTONES` is read BEFORE `_MANIFEST`
+    * (r18 ADVICE): a reader racing a copy-on-write mutator that captured
+    * the PRE-rewrite manifest with the POST-switch sidecar could serve a
+    * snapshot-pinned replaced shard WITHOUT its tombstone scope —
+    * silently resurrecting deleted keys. Scopes only ever SHRINK, so the
+    * inverted skew (stale tombstones + fresh manifest) is safe: at worst
+    * a scope names a shard the manifest no longer lists, and matches
+    * nothing. */
+  def published(t: ShardDir)
+      : (Option[ShardTombstones.Tombstones], Option[Seq[(String, Long)]]) = {
+    val tombs = ShardTombstones.readIfExists(t.fs, t.dir)
+    (tombs, manifestIfExists(t))
   }
 
   /** The mutator prologue: `body` runs under the table's [[ShardLock]]

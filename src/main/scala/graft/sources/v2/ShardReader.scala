@@ -1,9 +1,9 @@
 package graft.sources.v2
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col, element_at, input_file_name, split}
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -39,17 +39,69 @@ object ShardReader {
     * overhead when none are live. */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val t = ShardPublish.table(spark, path)
-    val (dir, fs) = (t.dir, t.fs)
-    // _TOMBSTONES BEFORE _MANIFEST (r18 ADVICE): the non-atomic pair
-    // must never capture a pre-rewrite manifest with a post-switch
-    // sidecar (a pinned replaced shard would serve without its scope —
-    // silent key resurrection). Scopes only shrink, so the inverted
-    // skew is the safe direction. Same ordering as ShardScanMeta.load.
-    val tomb = ShardTombstones.readIfExists(fs, dir)
-    val files = ShardPublish.manifest(t)
-      .map { case (name, _) => new Path(dir, name).toString }
-    val base = ShardPayload.read(spark, schema, ShardPayload.of(fs, dir), files)
-    tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
+    val (tombs, mf) = ShardPublish.published(t)
+    scan(spark, t, schema, ShardPublish.committed(t, mf).map(_._1), tombs,
+      keepShard = false)
+  }
+
+  /**
+   * The one relational scan of a shard table: the named `shards`
+   * (manifest or snapshot entries) of `t` under `schema`, decoded by
+   * Spark's json/parquet file reader in the table's payload format,
+   * with the segments of `tombs` anti-joined out — a row goes iff its
+   * (key, shard) pair is scoped by some segment. Rows carry their shard
+   * file name in `__shard` while the anti-join needs it, and after it
+   * when `keepShard` (the mutators count and rewrite per shard). Zero
+   * overhead when neither applies. Fails LOUD when `schema` cannot
+   * apply the tombstones ([[ShardTombstones.keyType]]).
+   */
+  private[graft] def scan(
+      spark: SparkSession,
+      t: ShardDir,
+      schema: StructType,
+      shards: Seq[String],
+      tombs: Option[ShardTombstones.Tombstones],
+      keepShard: Boolean): DataFrame = {
+    val files = shards.map(n => new Path(t.dir, n).toString)
+    val rows =
+      if (files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      else if (t.format == ShardPayload.Parquet)
+        spark.read.schema(schema).parquet(files: _*)
+      else spark.read.schema(schema).json(files: _*)
+    val live = tombs.filter(_.segments.nonEmpty)
+    if (live.isEmpty && !keepShard) return rows
+    // the tag derives from input_file_name(), which only resolves below
+    // the first exchange: it is taken directly over the file scan
+    val tagged = rows.withColumn("__shard",
+      element_at(split(input_file_name(), "/"), -1))
+    // One anti-join per live segment, keyed on the KEY COLUMN ONLY,
+    // with the segment's shard scope as a row-local isInCollection
+    // predicate on the tag. The prior form cross-joined each segment's
+    // keys against its scope (nKeys × nShards rows) and force-broadcast
+    // the product — on a many-shard table a large deferred delete
+    // exploded that broadcast quadratically (r18 ADVICE, medium). Here
+    // each join ships only the takedown-sized key set; the broadcast
+    // hint applies only while the sidecar-recorded key count stays
+    // under the same bound the V2 scan's inline path uses — past it the
+    // planner/AQE picks the strategy (the ngramJaccard guarded-hint
+    // discipline). Segments are few by construction (one per pending
+    // delete, retired at compaction), so the chain stays shallow.
+    val out = live.fold(tagged) { ts =>
+      val keyType = ShardTombstones.keyType(ts, schema, t.dir)
+      ts.segments.foldLeft(tagged) { (acc, s) =>
+        val keys = ShardTombstones.segmentKeys(spark, t.dir, ts, keyType, s)
+          .select(col(ts.column).as("__tk"))
+        val hinted =
+          if (s.nKeys <= ShardScan.MaxInlineTombstoneKeys) broadcast(keys)
+          else keys
+        acc.join(hinted,
+          acc(ts.column) === col("__tk") &&
+            acc("__shard").isInCollection(s.shards.toSeq.sorted),
+          "left_anti")
+      }
+    }
+    if (keepShard) out else out.drop("__shard")
   }
 
   /** The table's own authoritative schema (`_SCHEMA` sidecar, written
@@ -58,8 +110,7 @@ object ShardReader {
     * schema argument of [[read]] made unnecessary. Fails loud on a
     * pre-schema table (pass the schema explicitly there). */
   def tableSchema(spark: SparkSession, path: String): StructType = {
-    val t = ShardPublish.table(spark, path)
-    ShardSchema.readIfExists(t.fs, t.dir).getOrElse(throw new
+    ShardPublish.table(spark, path).schemaSidecar.getOrElse(throw new
         IllegalArgumentException(
           s"no ${ShardSchema.FileName} under $path — a pre-evolution " +
             "table; pass the schema explicitly to read()"))
@@ -131,9 +182,8 @@ object ShardReader {
       .limit(MaxPushKeys + 1).collect()
     val small = few.length <= MaxPushKeys
     if (cached) { if (small) keyDf.unpersist() else graft.CacheScope.adopt(keyDf) }
-    // _TOMBSTONES before _MANIFEST — see read() for the skew argument
-    val tomb = ShardTombstones.readIfExists(fs, dir)
-    val names = ShardPublish.manifest(t).map(_._1)
+    val (tombs, mf) = ShardPublish.published(t)
+    val names = ShardPublish.committed(t, mf).map(_._1)
     val (stats, bloom) = (ShardStats.readAll(fs, dir), ShardBloom.readAll(fs, dir))
     val candidates =
       if (small) ShardPrune.candidateShardsLocal(stats, bloom, keyType, keyCol,
@@ -142,14 +192,9 @@ object ShardReader {
         keyDf, names)
     val lits = few.map(_.get(0)).filter(_ != null) // null never equals
     if (candidates.isEmpty || lits.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else {
-      val base = ShardPayload.read(spark, schema, ShardPayload.of(fs, dir),
-        candidates.map(n => new Path(dir, n).toString))
-      // tombstones directly over the scan: the shard tag derives from
-      // input_file_name(), which only resolves below the first exchange
-      val df = tomb.fold(base)(t => ShardTombstones.minus(spark, dir, base, t, None))
+      val df = scan(spark, t, schema, candidates, tombs, keepShard = false)
       if (small) df.filter(df(keyCol).isin(lits.toSeq: _*))
       else df.join(keyDf, df(keyCol) === col("__k"), "left_semi")
     }

@@ -1,22 +1,17 @@
 package graft.sources.v2
 
-import java.nio.charset.StandardCharsets
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -39,22 +34,20 @@ import org.apache.spark.unsafe.types.UTF8String
  *    re-prunes the partition list at execution time through the same
  *    probe — the dynamic-partition-pruning shape, keyed on the store's
  *    own sidecars;
- *  - **column pruning**: the jsonl reader emits only the requested
- *    columns, the parquet reader requests only their pages;
+ *  - **column pruning**: only the requested columns are decoded;
  *  - **merge-on-read tombstones**: live [[ShardTombstones]] segments
  *    are loaded driver-side (takedown-sized by design, with a loud
- *    guard) and each reader filters its shard's scoped keys out.
+ *    guard) and each task screens its shard's scoped keys out.
  *
- * Row delivery is a purpose-built row-at-a-time reader per payload
- * (Jackson over jsonl lines; parquet-hadoop [[ParquetReader]] under an
- * [[InternalRow]] materializer — the read twin of [[ShardPayload]]'s
- * WriteSupport). Filters are reported as pushed-for-pruning but are
- * ALWAYS also left in the plan (`pushedFilters` ⊂ handled-by-Spark):
- * the prune is shard-level, row-level evaluation stays above the scan,
- * so a false-positive shard can never leak a wrong row. Full-table
- * SCANS of parquet payloads should still prefer [[ShardReader.read]] —
- * it rides Spark's vectorized parquet reader — while point lookups and
- * SQL access get the pruned V2 path; the two are parity-gated by the
+ * Rows are decoded by the same Spark file readers [[ShardReader.scan]]
+ * plans (`JsonFileFormat`, `ParquetFileFormat` — the vectorized one,
+ * handing out rows): the reader is built once on the driver and each
+ * task reads one shard file as one split, so the relation and the
+ * imperative reader cannot decode a value differently. Filters are
+ * reported as pushed-for-pruning but are ALWAYS also left in the plan
+ * (`pushedFilters` ⊂ handled-by-Spark): the prune is shard-level,
+ * row-level evaluation stays above the scan, so a false-positive shard
+ * can never leak a wrong row. The two paths are parity-gated by the
  * `shard_v2_read` oracle row.
  */
 private[v2] object ShardScan {
@@ -226,28 +219,15 @@ private[v2] final case class ShardScanMeta(
 
 private[v2] object ShardScanMeta {
   def load(path: String): ShardScanMeta = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(
-      SparkSession.active.sessionState.newHadoopConf())
-    val mfPath = new Path(dir, ShardManifest.FileName)
-    // _TOMBSTONES is read BEFORE _MANIFEST (r18 ADVICE): the two reads
-    // are not atomic, and a reader racing a copy-on-write mutator that
-    // captured the PRE-rewrite manifest with the POST-switch
-    // sidecar could serve a snapshot-pinned replaced shard WITHOUT its
-    // tombstone scope — silently resurrecting deleted keys. Scopes only
-    // ever SHRINK, so the inverted skew (stale tombstones + fresh
-    // manifest) is safe: at worst a scope names a shard the manifest no
-    // longer lists, and the anti-join predicate matches nothing.
-    val tombstones = ShardTombstones.readIfExists(fs, dir)
-    val manifest = ShardPublish.readTextIfExists(fs, mfPath)
+    val t = ShardPublish.table(SparkSession.active, path)
+    val (tombstones, manifest) = ShardPublish.published(t)
     ShardScanMeta(
       manifestExists = manifest.isDefined,
-      entries = manifest.fold(Seq.empty[(String, Long)])(
-        ShardManifest.parse(_, mfPath)),
-      stats = ShardStats.readAll(fs, dir),
-      bloom = ShardBloom.readAll(fs, dir),
+      entries = manifest.getOrElse(Nil),
+      stats = ShardStats.readAll(t.fs, t.dir),
+      bloom = ShardBloom.readAll(t.fs, t.dir),
       tombstones = tombstones,
-      fmt = ShardPayload.of(fs, dir))
+      fmt = t.format)
   }
 }
 
@@ -326,65 +306,97 @@ private[v2] class ShardScanImpl(
             f.dataType, colName, vals, candidates)
         }
     }
-    val fmt = meta.fmt
-    // merge-on-read tombstones ride into the readers as per-segment
-    // (scope, keys) pairs — loaded once on the driver, takedown-sized
-    val tombs = meta.tombstones.map { t =>
-      val totalKeys = t.segments.map(_.nKeys).sum
-      require(totalKeys <= ShardScan.MaxInlineTombstoneKeys,
-        s"table at $path carries $totalKeys pending tombstone keys — " +
-          "beyond the V2 scan's inline bound; compact to materialize " +
-          "them or read through ShardReader.read (relational anti-join)")
-      require(tableSchema.fieldNames.contains(t.column) &&
-        ShardSchema.tagOf(
-          tableSchema(t.column).dataType) == t.tag,
-        s"tombstones at $path are keyed on '${t.column}' (${t.tag}) which " +
-          "the table schema does not carry compatibly")
-      val keyDt = tableSchema(t.column).dataType
-      // explicit one-column schema: the type was just verified against
-      // the sidecar tag, so the read skips footer inference (r20)
-      val segSchema = StructType(Seq(StructField(t.column, keyDt)))
-      (t.column, t.segments.map { s =>
-        val keys = spark.read.schema(segSchema)
-          .parquet(new Path(dir, s.file).toString)
-          .collect().map(_.get(0)).filter(_ != null)
-          .map(ShardRowReader.toComparable(_, keyDt))
-        (s.shards, keys)
-      })
+    // merge-on-read tombstones ride into the tasks as per-shard excluded
+    // key sets — loaded once on the driver, takedown-sized
+    val segs = tombKey.fold(Seq.empty[(Set[String], Array[Any])]) {
+      case (t, keyDt) =>
+        val totalKeys = t.segments.map(_.nKeys).sum
+        require(totalKeys <= ShardScan.MaxInlineTombstoneKeys,
+          s"table at $path carries $totalKeys pending tombstone keys — " +
+            "beyond the V2 scan's inline bound; compact to materialize " +
+            "them or read through ShardReader.read (relational anti-join)")
+        t.segments.map(s => (s.shards,
+          ShardTombstones.segmentKeys(spark, dir, t, keyDt, s).collect()
+            .map(_.get(0)).filter(_ != null)
+            .map(ShardRowReader.toComparable(_, keyDt))))
     }
     candidates.map { name =>
-      val excluded: Array[Any] = tombs match {
-        case Some((_, segs)) =>
-          segs.filter(_._1.contains(name)).flatMap(_._2).toArray
-        case None => Array.empty
-      }
-      ShardScanPartition(new Path(dir, name).toString, fmt,
-        tombs.map(_._1).orNull, excluded): InputPartition
+      ShardScanPartition(new Path(dir, name).toString,
+        segs.filter(_._1.contains(name)).flatMap(_._2).toArray): InputPartition
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ShardReaderFactory(tableSchema, required,
-      new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()))
+  /** The live tombstones and their key type, checked against the table
+    * schema ([[ShardTombstones.keyType]]). */
+  @transient private lazy val tombKey: Option[(ShardTombstones.Tombstones, DataType)] =
+    meta.tombstones.map(t =>
+      (t, ShardTombstones.keyType(t, tableSchema, new Path(path))))
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
+    // the screen needs the tombstone key column even when the plan does not
+    val tombCol = tombKey.map(_._1.column)
+    val readCols = StructType(required.fields ++
+      tombCol.filterNot(required.fieldNames.contains).map(tableSchema(_)))
+    val (format: FileFormat, options) =
+      if (meta.fmt == ShardPayload.Parquet)
+        (new ParquetFileFormat, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"))
+      else (new JsonFileFormat, Map.empty[String, String])
+    new ShardReaderFactory(
+      format.buildReaderWithPartitionValues(spark, tableSchema, new StructType(),
+        readCols, Nil, options, conf),
+      required.length, readCols, tombCol.fold(-1)(readCols.fieldIndex),
+      new SerializableHadoopConf(conf))
+  }
 }
 
 /** One manifested shard file; `excludedKeys` are the tombstone keys
-  * scoped to THIS shard (normalized comparable form), `tombColumn`
-  * names the column they key on (null when none). */
-private[v2] case class ShardScanPartition(
-    file: String, fmt: String, tombColumn: String, excludedKeys: Array[Any])
+  * scoped to THIS shard (normalized comparable form). */
+private[v2] case class ShardScanPartition(file: String, excludedKeys: Array[Any])
     extends InputPartition
 
+/** One task per shard: `read` (the Spark file reader built on the
+  * driver) decodes the file's `readCols`, the tombstone screen drops
+  * rows whose key at `keyIdx` the shard's scope excludes, and rows are
+  * cut to the plan's first `width` columns when the key column was read
+  * only for the screen. */
 private[v2] class ShardReaderFactory(
-    tableSchema: StructType, required: StructType, conf: SerializableHadoopConf)
+    read: PartitionedFile => Iterator[InternalRow],
+    width: Int,
+    readCols: StructType,
+    keyIdx: Int,
+    conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val sp = p.asInstanceOf[ShardScanPartition]
-    sp.fmt match {
-      case ShardPayload.Parquet =>
-        new ParquetShardPartitionReader(sp, tableSchema, required, conf)
-      case _ => new JsonlShardPartitionReader(sp, tableSchema, required, conf)
+    val file = new Path(sp.file)
+    // both readers take a byte range: the whole file is one split
+    val len = file.getFileSystem(conf.value).getFileStatus(file).getLen
+    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(file),
+      0L, len, fileSize = len))
+    val excluded = new java.util.HashSet[Any](sp.excludedKeys.length * 2)
+    sp.excludedKeys.foreach(excluded.add)
+    val keyDt = if (keyIdx < 0) NullType else readCols(keyIdx).dataType
+    val cut =
+      if (readCols.length == width) null
+      else UnsafeProjection.create(readCols.fields.take(width).map(_.dataType))
+    new PartitionReader[InternalRow] {
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (rows.hasNext) {
+          row = rows.next()
+          if (excluded.isEmpty || row.isNullAt(keyIdx) || !excluded.contains(
+              ShardRowReader.toComparable(row.get(keyIdx, keyDt), keyDt)))
+            return true
+        }
+        false
+      }
+      override def get(): InternalRow = if (cut == null) row else cut(row)
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
     }
   }
 }
@@ -405,188 +417,5 @@ private[v2] object ShardRowReader {
       val f = v.asInstanceOf[Number].floatValue()
       java.lang.Float.valueOf(if (f == 0.0f) 0.0f else f)
     case _ => v
-  }
-}
-
-/** Shared tombstone screen: reads parse the shard row, then drop it
-  * when its key is in the shard-scoped excluded set. */
-private[v2] abstract class ScreenedReader(
-    sp: ShardScanPartition, tableSchema: StructType, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val excluded: java.util.HashSet[Any] =
-    if (sp.excludedKeys.isEmpty) null
-    else {
-      val s = new java.util.HashSet[Any](sp.excludedKeys.length * 2)
-      sp.excludedKeys.foreach(s.add)
-      s
-    }
-  protected val keyDt: DataType =
-    if (sp.tombColumn == null) NullType else tableSchema(sp.tombColumn).dataType
-  /** The parsed key value of the CURRENT row (comparable form), or null. */
-  protected def currentKey(): Any
-  protected def advance(): Boolean
-  final override def next(): Boolean = {
-    while (advance()) {
-      if (excluded == null) return true
-      val k = currentKey()
-      if (k == null || !excluded.contains(k)) return true
-    }
-    false
-  }
-}
-
-/** Jackson line parser → InternalRow of the REQUIRED columns; the
-  * tombstone key column is parsed even when not required. */
-private[v2] class JsonlShardPartitionReader(
-    sp: ShardScanPartition, tableSchema: StructType, required: StructType,
-    conf: SerializableHadoopConf)
-    extends ScreenedReader(sp, tableSchema, required) {
-  private val in = {
-    val p = new Path(sp.file)
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      p.getFileSystem(conf.value).open(p), StandardCharsets.UTF_8))
-  }
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private val row = new GenericInternalRow(required.length)
-  private var key: Any = null
-
-  override protected def currentKey(): Any = key
-  override protected def advance(): Boolean = {
-    var line = in.readLine()
-    while (line != null && line.isEmpty) line = in.readLine()
-    if (line == null) return false
-    val node = mapper.readTree(line)
-    var i = 0
-    while (i < required.length) {
-      val f = required(i)
-      row.update(i, JsonlShardPartitionReader.valueOf(node, f.name, f.dataType))
-      i += 1
-    }
-    key =
-      if (sp.tombColumn == null) null
-      else {
-        val raw = JsonlShardPartitionReader.valueOf(node, sp.tombColumn, keyDt)
-        if (raw == null) null else ShardRowReader.toComparable(raw, keyDt)
-      }
-    true
-  }
-  override def get(): InternalRow = row
-  override def close(): Unit = in.close()
-}
-
-private[v2] object JsonlShardPartitionReader {
-  def valueOf(node: com.fasterxml.jackson.databind.JsonNode,
-      name: String, dt: DataType): Any = {
-    val v = node.get(name)
-    if (v == null || v.isNull) null
-    else dt match {
-      case StringType => UTF8String.fromString(v.asText())
-      case LongType => v.asLong()
-      case IntegerType => v.asInt()
-      case ShortType => v.asInt().toShort
-      case ByteType => v.asInt().toByte
-      case DoubleType => v.asDouble()
-      case FloatType => v.asDouble().toFloat
-      case BooleanType => v.asBoolean()
-      case other => throw new IllegalStateException(
-        s"ShardSink.validate admits no $other")
-    }
-  }
-}
-
-/** parquet-hadoop reader under an InternalRow materializer — the read
-  * twin of [[ShardPayload]]'s WriteSupport. Requests only the needed
-  * columns' pages; columns absent from an old shard read back NULL
-  * (widen-only evolution). */
-private[v2] class ParquetShardPartitionReader(
-    sp: ShardScanPartition, tableSchema: StructType, required: StructType,
-    conf: SerializableHadoopConf)
-    extends ScreenedReader(sp, tableSchema, required) {
-  // read schema = required ∪ the tombstone key column (appended when
-  // missing — parsed for the screen, not emitted). A ZERO-column plan
-  // (SELECT 1, df.isEmpty — possible only with no live tombstones, else
-  // the key column is appended) must still read ONE arbitrary table
-  // column: parquet rejects an empty group schema outright
-  // (InvalidSchemaException), so an empty projection would fail loud on
-  // a legitimate row-count query (r18 ADVICE, low). jsonl tolerates
-  // zero columns, so only this reader pads.
-  private val readCols: StructType = {
-    val withTomb =
-      if (sp.tombColumn == null || required.fieldNames.contains(sp.tombColumn))
-        required
-      else StructType(required.fields :+ tableSchema(sp.tombColumn))
-    if (withTomb.isEmpty) StructType(Array(tableSchema.fields.head))
-    else withTomb
-  }
-  private val keyIdx =
-    if (sp.tombColumn == null) -1 else readCols.fieldNames.indexOf(sp.tombColumn)
-  private val reader: ParquetReader[InternalRow] =
-    ParquetReader.builder(
-      new InternalRowReadSupport(readCols), new Path(sp.file))
-      .withConf(conf.value).build()
-  private var current: InternalRow = _
-
-  override protected def currentKey(): Any =
-    if (keyIdx < 0 || current.isNullAt(keyIdx)) null
-    else ShardRowReader.toComparable(current.get(keyIdx, keyDt), keyDt)
-  override protected def advance(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-  override def get(): InternalRow =
-    if (readCols.length == required.length) current
-    else new GenericInternalRow(Array.tabulate[Any](required.length)(i =>
-      current.get(i, required(i).dataType)))
-  override def close(): Unit = reader.close()
-}
-
-private[v2] class InternalRowReadSupport(requested: StructType)
-    extends ReadSupport[InternalRow] {
-  override def init(ctx: InitContext): ReadSupport.ReadContext = {
-    val fileSchema = ctx.getFileSchema
-    // request only the fields this file actually has; the materializer
-    // leaves the rest NULL (widen-only evolution)
-    val present = StructType(requested.fields.filter(f =>
-      fileSchema.containsField(f.name)))
-    new ReadSupport.ReadContext(ShardPayload.messageType(present))
-  }
-  override def prepareForRead(
-      conf: org.apache.hadoop.conf.Configuration,
-      meta: java.util.Map[String, String],
-      fileSchema: MessageType,
-      ctx: ReadSupport.ReadContext): RecordMaterializer[InternalRow] = {
-    val projection = ctx.getRequestedSchema
-    // projected field i writes into requested slot slotOf(i)
-    val slotOf: Array[Int] = (0 until projection.getFieldCount)
-      .map(i => requested.fieldNames.indexOf(
-        projection.getFields.get(i).getName)).toArray
-    new RecordMaterializer[InternalRow] {
-      private val row = new GenericInternalRow(requested.length)
-      private val root: GroupConverter = new GroupConverter {
-        override def getConverter(field: Int): Converter =
-          new PrimitiveConverter {
-            private val slot = slotOf(field)
-            private val dt = requested(slot).dataType
-            override def addBinary(v: Binary): Unit =
-              row.update(slot, UTF8String.fromBytes(v.getBytes))
-            override def addLong(v: Long): Unit = row.update(slot, v)
-            override def addInt(v: Int): Unit = row.update(slot, dt match {
-              case ShortType => v.toShort
-              case ByteType => v.toByte
-              case _ => v
-            })
-            override def addDouble(v: Double): Unit = row.update(slot, v)
-            override def addFloat(v: Float): Unit = row.update(slot, v)
-            override def addBoolean(v: Boolean): Unit = row.update(slot, v)
-          }
-        override def start(): Unit = {
-          var i = 0
-          while (i < requested.length) { row.update(i, null); i += 1 }
-        }
-        override def end(): Unit = ()
-      }
-      override def getRootConverter: GroupConverter = root
-      override def getCurrentRecord: InternalRow = row
-    }
   }
 }

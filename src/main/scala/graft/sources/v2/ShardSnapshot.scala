@@ -193,7 +193,8 @@ object ShardSnapshot {
     * number, or an external deletion). */
   def read(
       spark: SparkSession, path: String, schema: StructType, v: Int): DataFrame = {
-    val (fs, dir) = fsFor(spark, path)
+    val t = ShardPublish.table(spark, path)
+    val (fs, dir) = (t.fs, t.dir)
     val p = new Path(dir, s"$Prefix$v")
     require(fs.exists(p), s"no snapshot v$v under $path")
     val (_, es, tombs) = readSnapshotFile(fs, p)
@@ -211,12 +212,10 @@ object ShardSnapshot {
         s"snapshot v$v of $path records tombstone segment ${s.file} which " +
           "no longer exists — it was vacuumed or externally deleted; " +
           "the snapshot is gone")))
-    val df = ShardPayload.read(spark, schema, ShardPayload.of(fs, dir),
-      es.map { case (name, _) => new Path(dir, name).toString })
     // the tombstones recorded AT CREATE TIME apply — not the live ones:
     // this is what keeps a post-delete snapshot honest after compaction
     // retired the segments, and a pre-delete snapshot serving the keys
-    tombs.fold(df)(t => ShardTombstones.minus(spark, dir, df, t, None))
+    ShardReader.scan(spark, t, schema, es.map(_._1), tombs, keepShard = false)
   }
 
   /** Delete snapshot `v` (its pins lapse; [[vacuum]] reclaims).

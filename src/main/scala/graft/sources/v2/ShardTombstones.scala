@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
  * every HIT shard in full (shard-sized I/O and lock-held commit time);
  * through [[ShardDelete.deleteByKeyDeferred]] it publishes one
  * takedown-sized TOMBSTONE SEGMENT plus one sidecar line, and every
- * read path anti-joins the live tombstones out. Compaction
+ * read path filters the live tombstones out. Compaction
  * ([[ShardCompact.compact]]) MATERIALIZES the deletes into rewritten
  * shards and retires the absorbed segments — copy-on-write stays as the
  * materialization path, exactly the discipline the house BM25/ANN
@@ -167,77 +167,31 @@ object ShardTombstones {
     out
   }
 
-  // ---- read-side application
+  // ---- read-side application ([[ShardReader.scan]] anti-joins, the V2
+  // ---- scan screens inside its readers)
 
-  /** Anti-join the live tombstones out of `df` — the merge-on-read
-    * serve path. `df` must be tagged per row with its shard file name
-    * in `tagCol` (reads that lack a tag pass `None` and one is derived
-    * from `input_file_name()`); rows are removed iff (key, shard) is
-    * scoped by some live segment. Zero overhead when no tombstones are
-    * live. Fails LOUD when `df` lacks the tombstone key column or its
-    * type drifted from the sidecar tag — returning unfiltered rows
-    * would resurrect deleted keys, the one direction this file must
-    * never take. */
-  def minus(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      df: DataFrame,
-      tagCol: Option[String] = None): DataFrame =
-    readIfExists(fs, dir).fold(df)(t => minus(spark, dir, df, t, tagCol))
-
-  /** [[minus]] over pre-parsed tombstones ([[ShardSnapshot.read]] passes
-    * the snapshot-recorded state here). */
-  def minus(
-      spark: SparkSession,
-      dir: Path,
-      df: DataFrame,
-      t: Tombstones,
-      tagCol: Option[String]): DataFrame = {
-    if (t.segments.isEmpty) return df
-    require(df.columns.contains(t.column),
+  /** The tombstone key's type in the read `schema`. Fails LOUD when the
+    * schema lacks the key column or its type drifted from the sidecar
+    * tag — a read that returned unfiltered rows would resurrect deleted
+    * keys, the one direction this file must never take. */
+  private[v2] def keyType(t: Tombstones, schema: StructType, dir: Path): DataType = {
+    require(schema.fieldNames.contains(t.column),
       s"table at $dir carries tombstones on '${t.column}' but the read " +
-        s"schema (${df.columns.mkString(",")}) lacks it — a read that " +
+        s"schema (${schema.fieldNames.mkString(",")}) lacks it — a read that " +
         "cannot apply the tombstones would resurrect deleted keys")
-    require(ShardSchema.tagOf(df.schema(t.column).dataType) == t.tag,
+    val dt = schema(t.column).dataType
+    require(ShardSchema.tagOf(dt) == t.tag,
       s"tombstones at $dir are keyed on '${t.column}' (${t.tag}) but the " +
-        s"read schema types it ${df.schema(t.column).dataType} — an " +
-        "equality over drifted types could silently resurrect deleted keys")
-    val dfTag = tagCol.getOrElse("__tomb_shard")
-    val tagged = tagCol.fold(
-      df.withColumn(dfTag, element_at(split(input_file_name(), "/"), -1)))(
-      _ => df)
-    // One anti-join per live segment, keyed on the KEY COLUMN ONLY,
-    // with the segment's shard scope as a row-local isInCollection
-    // predicate on the tag. The prior form cross-joined each segment's
-    // keys against its scope (nKeys × nShards rows) and force-broadcast
-    // the product — on a many-shard table a large deferred delete
-    // exploded that broadcast quadratically (r18 ADVICE, medium). Here
-    // each join ships only the takedown-sized key set; the broadcast
-    // hint applies only while the sidecar-recorded key count stays
-    // under the same bound the V2 scan's inline path uses — past it the
-    // planner/AQE picks the strategy (the ngramJaccard guarded-hint
-    // discipline). Segments are few by construction (one per pending
-    // delete, retired at compaction), so the chain stays shallow.
-    // segment schema is KNOWN (one column, the sidecar-tagged key type
-    // the requires above just verified) — pass it explicitly so each
-    // read skips the driver-side footer-inference job (r20; the
-    // lifecycle rows pay this read once per segment per scan)
-    val segSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        t.column, df.schema(t.column).dataType)))
-    val out = t.segments.foldLeft(tagged) { (acc, s) =>
-      val keys = spark.read.schema(segSchema)
-        .parquet(new Path(dir, s.file).toString)
-        .select(col(t.column).as("__tk"))
-      val hinted =
-        if (s.nKeys <= ShardScan.MaxInlineTombstoneKeys) broadcast(keys)
-        else keys
-      acc.join(hinted,
-        acc(t.column) === col("__tk") &&
-          acc(dfTag).isInCollection(s.shards.toSeq.sorted),
-        "left_anti")
-    }
-    tagCol.fold(out.drop(dfTag))(_ => out)
+        s"read schema types it $dt — an equality over drifted types could " +
+        "silently resurrect deleted keys")
+    dt
   }
+
+  /** One segment's keys as a one-column frame named `t.column`. The
+    * schema is KNOWN (the sidecar-tagged key type [[keyType]] verified),
+    * so the read skips the driver-side footer-inference job (r20). */
+  private[v2] def segmentKeys(spark: SparkSession, dir: Path, t: Tombstones,
+      keyType: DataType, s: Segment): DataFrame =
+    spark.read.schema(StructType(Seq(StructField(t.column, keyType))))
+      .parquet(new Path(dir, s.file).toString)
 }
